@@ -65,9 +65,10 @@ object Blocking {
     * every frame in `consumers` has appeared in an executed plan (success or
     * failure).
     *
-    * Why: the salted-join entries feed three consumers inside a single
-    * materialization (block sizes + both join sides) — that is what the
-    * cache deduplicates. But a plain .persist() pins the entry in the
+    * Why: the salted-join entries feed two consumers (block sizes + the
+    * size join) and the sized entries four (both cross-salt roles + both
+    * same-salt sides) inside a single materialization — that is what the
+    * caches deduplicate. But a plain .persist() pins the entry in the
     * session CacheManager FOREVER; repeated dedup-operator calls in a
     * long-lived session accumulate pinned block storage until eviction
     * pressure or OOM (round-2 ADVICE). Matching on the CONSUMER plan (the
@@ -200,17 +201,27 @@ object Blocking {
                           payload: Seq[String] = Nil,
                           persistEntries: Boolean = true,
                           gridRows: Option[Long] = None): DataFrame = {
-    // entries feed multiple consumers (block sizes + join sides); without
-    // materialization the upstream key computation (minhash bands, simhash
-    // aggregation, gram arrays) re-executes per consumer. The cache lives
-    // until the first action consuming the PAIRS frame, then auto-releases
-    // (no session-lifetime pinning; releaseAfterConsumed registered on the
-    // output below). Callers that already checkpoint their entries (the ER
-    // pipeline) opt out.
-    val e = if (persistEntries)
-      entries.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else entries
-    val sized = sizedEntries(e, cap, maxBlock, payload)
+    // Two caches when the entries are computed in the plan (persistEntries,
+    // every Dedup operator): the ENTRIES, so the upstream key computation
+    // (minhash bands, simhash fingerprints, gram arrays) runs once for the
+    // size aggregate and the size join, and the SIZED entries, so the grid's
+    // four legs (two cross-salt roles, two same-salt sides) read one sized
+    // table instead of each re-shuffling the entries, re-aggregating block
+    // sizes and redoing the size join. Exchange reuse does not dedup those
+    // four copies: legs reading an InMemoryRelation never shared an exchange
+    // here (measured: four size aggregates and four size joins per grid, no
+    // ReusedExchange). Both caches live until the first action consuming the
+    // PAIRS frame, then auto-release (releaseAfterConsumed on the output
+    // below; derived cache first, so uncaching the entries never re-plans
+    // it). Callers whose entries are already materialized (the ER pipeline's
+    // snapshot-backed blocks) opt out of both: there caching the sized table
+    // measured no faster than re-scanning the input (6,000-page staged
+    // linkage on 4 cores).
+    def cached(df: DataFrame) =
+      if (persistEntries) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else df
+    val e = cached(entries)
+    val sized = cached(sizedEntries(e, cap, maxBlock, payload))
     val lid = col("l.id"); val rid = col("r.id")
     // cross-salt: canonicalize ids (role assignment is salt-order, not
     // id-order), payloads follow their row
@@ -269,7 +280,7 @@ object Blocking {
         col("l.salt") === col("r.salt") && lid < rid)
       .select(sameCols: _*)
     val out = cross.unionByName(same)
-    if (persistEntries) releaseAfterConsumed(Seq(e), Seq(out))
+    if (persistEntries) releaseAfterConsumed(Seq(sized, e), Seq(out))
     out
   }
 

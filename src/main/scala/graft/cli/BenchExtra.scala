@@ -43,6 +43,7 @@ object BenchExtra {
     })
 
     val headline = graft.Bench.headline
+    require(upTo.isEmpty || headline.contains(upTo), s"unknown query $upTo")
     val toRun = if (upTo.nonEmpty) headline.take(headline.indexOf(upTo) + 1) else headline
     toRun.foreach { name =>
       curQuery = name

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.blocking.Blocking
@@ -22,7 +22,8 @@ import graft.functions.GraftFunctions
   * than ~2·cap rows — the quadratic-hot-bucket failure mode at 10^9 docs is
   * bounded by construction, with zero recall loss. Oversized blocks can
   * additionally be dropped (maxBlock > 0, counted via [[Blocking.blockStats]],
-  * never silent); the exact-result operators default to maxBlock = 0.
+  * never silent); the exact-result operators default to maxBlock = 0, and the
+  * first-collision operators (minhash, hamming/simhash) reject maxBlock > 0.
   */
 object Dedup {
 
@@ -75,12 +76,26 @@ object Dedup {
     * (A pair co-occurring only through a cross-band 64-bit hash collision —
     * different band positions hashing to one key — is no longer emitted;
     * such pairs were never part of the same-band LSH recall guarantee and
-    * arise with probability ~b²/2⁶⁴ per pair.) */
+    * arise with probability ~b²/2⁶⁴ per pair.)
+    *
+    * `maxBlock` must be 0: `first_equal_index` may name a band whose block
+    * the over-cap gate dropped, and the pair would then vanish uncounted
+    * (ROADMAP item C carries the root fix, a survived-keys mask). */
   def minhashCandidates(df0: DataFrame, idCol: String, textCol: String,
                         bands: Int = 32, rows: Int = 4, seed: Long = 42L,
-                        cap: Int = 256, maxBlock: Int = 0): DataFrame =
+                        cap: Int = 256, maxBlock: Int = 0): DataFrame = {
+    requireNoBlockDrop(maxBlock)
     minhashCandidatesPruned(df0, idCol, textCol, bands, rows, seed, cap,
       maxBlock, sizeRatioTau = 0.0)
+  }
+
+  /** Until the first-collision rule learns which keys survived the over-cap
+    * gate (ROADMAP item C), the operators using it refuse to drop blocks. */
+  private def requireNoBlockDrop(maxBlock: Int): Unit =
+    require(maxBlock == 0,
+      s"maxBlock = $maxBlock: first-collision emission would silently lose pairs whose " +
+        "first agreeing band is in a dropped block; pass maxBlock = 0 (root fix: " +
+        "ROADMAP item C, a survived-keys mask per entry)")
 
   /** [[minhashCandidates]] with an optional EXACT-SAFE size-ratio prune
     * evaluated inside the grid join (sizeRatioTau > 0): each entry carries
@@ -124,22 +139,35 @@ object Dedup {
     * Jaccard ≥ tau. The banded grid carries only signature metadata (band
     * array + 4-byte set size — never the token arrays); ratio-feasible
     * candidates then join the per-doc SORTED gram sets once per side and are
-    * verified by the allocation-free merge kernel. */
+    * verified by the allocation-free merge kernel. `maxBlock` must be 0 (see
+    * [[minhashCandidates]]). */
   def minhashNearDup(df: DataFrame, idCol: String, textCol: String, tau: Double,
                      bands: Int = 32, rows: Int = 4, seed: Long = 42L,
                      cap: Int = 256, maxBlock: Int = 0): DataFrame = {
+    requireNoBlockDrop(maxBlock)
     // one explicit exchange on id1 between the grid and the verify joins:
     // the old pair-dedup shuffle used to play this role — without it the
     // candidate subtree (the expensive grid join) is inlined into BOTH
     // verify joins' builds and executes twice (measured: 2 × ~115 s CPU of
     // identical grid work at sf0.1). The exchange carries only the slim
-    // (id1, id2) stream and is what the first sort-merge join needs anyway.
+    // (id1, id2) stream and is what the first join needs anyway.
+    // It is NUMBERED: a by-column repartition is byte-sized by AQE, which
+    // coalesced the sub-MB candidate stream into ONE partition — and the
+    // verify joins plus the jaccard_sorted kernel behind it into one task
+    // (measured at 6,000 pages on 4 cores: 55k pairs verified by a single
+    // 2.5 s task, three cores idle). Verify tasks are CPU-dense per byte,
+    // like the grid's; a numbered repartition is exempt from coalescing.
+    // The count is at least one wave (defaultParallelism) and at least the
+    // session's spark.sql.shuffle.partitions, so a cluster tuned for a
+    // large corpus keeps its per-task verify tables small. Not the grid's
+    // 8 waves: there a cores × 8 count measured slower and wrote 8× the
+    // output files.
     // The exact-safe size-ratio prune (J ≥ τ ⇒ |A|/|B| ∈ [τ, 1/τ]) runs
     // INSIDE the grid join via a 4-byte size payload, so infeasible pairs
     // never reach the candidate exchange or the verify joins at all.
     val cands = minhashCandidatesPruned(df, idCol, textCol, bands, rows, seed,
         cap, maxBlock, sizeRatioTau = tau)
-      .repartition(col("id1"))
+      .repartition(verifyPartitions(df.sparkSession), col("id1"))
     // grams sorted once per doc: the verify kernel is an allocation-free
     // linear merge (jaccard_sorted) instead of array_intersect's per-pair
     // hash set — the verify stage's dominant cost at ~10^8 pairs
@@ -152,6 +180,10 @@ object Dedup {
         GraftFunctions.jaccard_sorted(col("g1"), col("g2")).as("jaccard"))
       .where(col("jaccard") >= tau)
   }
+
+  private def verifyPartitions(spark: SparkSession): Int =
+    math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
 
   /** Token n-gram Jaccard similarity column between two token-array columns
     * (distinct-set semantics, matching both engines' intersect). */
@@ -215,9 +247,12 @@ object Dedup {
     * collapse them. The chunk index rides the grid as payload, both sides'
     * chunk values are recomputed from fp₁ xor fp₂ in-join, and the pair is
     * kept only where its chunk is the FIRST agreeing one — same pair set,
-    * exactly one emission, no pair-dedup exchange at all. */
+    * exactly one emission, no pair-dedup exchange at all. `maxBlock` must be
+    * 0 for the same reason as in [[minhashCandidates]]: the first agreeing
+    * chunk's block may be the one the over-cap gate dropped. */
   def hammingNearDup(fps: DataFrame, bits: Int, chunks: Int, maxHamming: Int,
                      cap: Int = 256, maxBlock: Int = 0): DataFrame = {
+    requireNoBlockDrop(maxBlock)
     require(maxHamming <= chunks - 1,
       s"$chunks-chunk banding guarantees recall only for hamming <= ${chunks - 1}")
     val width = bits / chunks
@@ -242,7 +277,8 @@ object Dedup {
   }
 
   /** SimHash near-duplicate pairs: 64-bit XXH64 simhash (one codegen pass,
-    * SimHash64Expr) banded into four 16-bit chunks — exact for hamming ≤ 3. */
+    * SimHash64Expr) banded into four 16-bit chunks — exact for hamming ≤ 3.
+    * `maxBlock` must be 0 (checked by [[hammingNearDup]]). */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 3, seed: Long = 0L,
                      cap: Int = 256, maxBlock: Int = 0): DataFrame =

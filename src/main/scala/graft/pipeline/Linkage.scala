@@ -450,9 +450,13 @@ object Linkage {
         gridRows = counters.get("blocks.rows").filter(_ > 0))
     })
 
-    // stage 2b: fused pairwise scoring (whole-stage codegen expressions)
+    // stage 2b: fused pairwise scoring (whole-stage codegen expressions).
+    // pairs_scored = candidates evaluated by phase 1, as in runTwoTableStaged
+    // (the pairs stage's row count, already in `counters` whether computed
+    // or resumed; the scored snapshot's own rows are the phase-2 survivors)
+    val candidatesScored = counters.getOrElse("pairs.rows", -1L)
     val scored = track("scored", store.stage("scored", fp,
-      countersFromWritten = w => Map("pairs_scored" -> w.count())) {
+      countersFromWritten = _ => Map("pairs_scored" -> candidatesScored)) {
       Scoring.score(spark, pairs, attrs.as[ScoreAttrs], cfg.weights).toDF()
     })
 

@@ -120,14 +120,20 @@ class BlockingSpec extends SparkSpec {
     import spark.implicits._
     val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
     val entries = spark.range(2000).select(pmod($"id", lit(7)).as("block_key"), $"id")
-    // persistEntries = true (the default): the entries frame is cached for
-    // the duration of ONE materialization, then the one-shot listener drops
-    // it — repeated operator calls must NOT accumulate pinned block storage
-    Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0).count()
+    // persistEntries = true (the default): the entries frame and the sized
+    // entries derived from it are cached for the duration of ONE
+    // materialization, then the one-shot listener drops both — repeated
+    // operator calls must NOT accumulate pinned block storage
+    val plans = ExecutedPlans.capture(spark) {
+      Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0).count()
+    }
+    val caches = plans.flatMap(ExecutedPlans.caches)
+    assert(caches.size == 2, s"expected the entries and sized-entries caches, read ${caches.size}")
     val deadline = System.currentTimeMillis + 15000
     def leaked = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
     while (leaked > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
     assert(leaked == 0, s"$leaked cached RDD(s) still pinned after the action")
+    assert(caches.forall(!_.cacheBuilder.isCachedColumnBuffersLoaded), "a grid cache outlived its consumer")
   }
 
   test("entries cache survives unrelated actions; only the consuming plan releases it") {
@@ -143,10 +149,28 @@ class BlockingSpec extends SparkSpec {
     spark.range(5).count() // unrelated query: no release either
     Thread.sleep(300)
     assert(extra > 0, s"cache released by a non-consuming action")
-    pairs.count() // the consuming plan: NOW it releases
+    // the consuming plan: NOW it releases — the entries cache and the sized
+    // cache it materialized along the way
+    val plans = ExecutedPlans.capture(spark)(pairs.count())
+    val caches = plans.flatMap(ExecutedPlans.caches)
+    assert(caches.size == 2, s"expected the entries and sized-entries caches, read ${caches.size}")
     val deadline = System.currentTimeMillis + 15000
     while (extra > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
     assert(extra == 0, s"$extra cached RDD(s) still pinned after the consuming action")
+    assert(caches.forall(!_.cacheBuilder.isCachedColumnBuffersLoaded), "a grid cache outlived its consumer")
+  }
+
+  test("candidatePairs (persistEntries = false) persists nothing") {
+    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    val blocks = spark.range(1500).select(pmod($"id", lit(3)).as("block_key"), $"id")
+    // the ER pipeline's block table is a snapshot already: re-scanning it
+    // is the plan, no entries or sized-entries cache
+    val plans = ExecutedPlans.capture(spark) {
+      assert(Blocking.candidatePairs(blocks, Blocking.Config(cap = 64, maxBlock = 0)).count() > 0)
+    }
+    assert(plans.nonEmpty && plans.forall(p => ExecutedPlans.caches(p).isEmpty),
+      plans.mkString("\n"))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).isEmpty)
   }
 
   test("abandoned consumer: cache force-releases after bounded misses, and the abandon is counted") {

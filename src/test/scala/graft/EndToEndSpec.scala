@@ -52,6 +52,8 @@ class EndToEndSpec extends SparkSpec {
     val store = new SnapshotStore(spark, workDir, resume = true)
     assert(store.counter("blocks", "blocks_built").exists(_ > 0))
     assert(store.counter("scored", "pairs_scored").exists(_ > 0))
+    // one meaning in both staged pipelines: candidates evaluated by phase 1
+    assert(store.counter("scored", "pairs_scored") == store.counter("pairs", "rows"))
     assert(store.counter("clusters", "merges_applied").isDefined)
     assert(store.counter("blocks", "blocks_dropped").contains(0L))
   }

@@ -33,6 +33,22 @@ class OperatorsSpec extends SparkSpec {
     assert(found >= (nTruth * 0.99).toLong, s"recall ${found.toDouble / nTruth}")
   }
 
+  test("first-collision operators refuse maxBlock > 0 instead of losing pairs silently") {
+    // the first agreeing band/chunk may sit in a block the over-cap gate
+    // dropped; the pair would then be emitted nowhere, and nothing counts it
+    val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("id", "text")
+    val calls: Seq[() => Any] = Seq(
+      () => Dedup.minhashCandidates(docs, "id", "text", maxBlock = 10),
+      () => Dedup.minhashNearDup(docs, "id", "text", tau = 0.8, maxBlock = 10),
+      () => Dedup.simhashNearDup(docs, "id", "text", maxBlock = 10),
+      () => Dedup.hammingNearDup(docs.select($"id", lit(0L).as("fp")),
+        bits = 64, chunks = 4, maxHamming = 3, maxBlock = 10))
+    calls.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("ROADMAP item C"), e.getMessage)
+    }
+  }
+
   test("simhash near-dup: hamming-banded candidates catch near-identical docs") {
     // simhash hamming ≤ 3 needs long documents (bit margins grow ~√n_tokens;
     // a 1-token change in a 12-token doc legitimately flips >3 bits)

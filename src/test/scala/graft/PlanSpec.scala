@@ -153,6 +153,64 @@ class PlanSpec extends SparkSpec {
       .findFirstIn(derived).isDefined, derived.take(2000))
   }
 
+  test("near-dup operators: block sizes aggregated once per grid, numbered verify exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.xxhash64
+    import spark.implicits._
+    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    // half templated, so some band/chunk blocks outgrow the cap and salt
+    val body = (0 until 60).map(i => s"w$i").mkString(" ")
+    val docs = (graft.fixtures.Fixture.pages(spark, 200).toDF().select($"url", $"text")
+      .union((0 until 200).map(i => (s"t$i", s"$body x${i % 2}")).toDF("url", "text")))
+      .select(xxhash64($"url").as("doc_id"), $"text")
+    val work = java.nio.file.Files.createTempDirectory("graft-neardup-plan").toString
+    def plan(op: String)(df: => DataFrame) = {
+      val writes = ExecutedPlans.capture(spark)(df.write.parquet(s"$work/$op"))
+        .map(ExecutedPlans.operators)
+        .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+      assert(writes.size == 1, s"$op: ${writes.size} write plans captured")
+      writes.head
+    }
+    def sizeAggregates(ops: Seq[org.apache.spark.sql.execution.SparkPlan]) = ops.count {
+      case a: BaseAggregateExec =>
+        a.groupingExpressions.map(_.name) == Seq("block_key") &&
+          a.aggregateExpressions.exists(_.mode == Final)
+      case _ => false
+    }
+    def verifyCounts(ops: Seq[org.apache.spark.sql.execution.SparkPlan]) = ops.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+        e.outputPartitioning
+    }.collect { case HashPartitioning(Seq(a: Attribute), n) if a.name == "id1" => n }
+    val mh = plan("minhash")(graft.operators.Dedup.minhashNearDup(docs, "doc_id", "text", 0.8))
+    // the grid's four legs read ONE sized-entries cache, not one size
+    // aggregate and size join per leg
+    assert(sizeAggregates(mh) == 1, mh.mkString("\n"))
+    // the candidate exchange feeding the verify joins is numbered (at least
+    // one wave): a by-column one is AQE-coalesced to a single verify task
+    val cores = spark.sparkContext.defaultParallelism
+    assert(verifyCounts(mh) == Seq(cores), mh.mkString("\n"))
+    // a session tuned to more shuffle partitions than cores keeps its count
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", (cores * 3).toString)
+    try {
+      val tuned = plan("minhash-tuned")(
+        graft.operators.Dedup.minhashNearDup(docs, "doc_id", "text", 0.8))
+      assert(verifyCounts(tuned) == Seq(cores * 3), tuned.mkString("\n"))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+    val sh = plan("simhash")(graft.operators.Dedup.simhashNearDup(docs, "doc_id", "text"))
+    assert(sizeAggregates(sh) == 1, sh.mkString("\n"))
+    // neither operator leaves a cache behind
+    val deadline = System.currentTimeMillis + 15000
+    def leaked = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
+    while (leaked > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
+    assert(leaked == 0, s"$leaked cached RDD(s) still pinned after the writes")
+  }
+
   test("snapshots partition by warc_day: date-filtered reads prune at the directory level") {
     import org.apache.spark.sql.functions._
     val workDir = java.nio.file.Files.createTempDirectory("graft-part").toString
