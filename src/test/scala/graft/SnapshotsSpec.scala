@@ -1,0 +1,45 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.lineage.Snapshots
+
+class SnapshotsSpec extends AnyFunSuite {
+
+  test("concurrent manifest writers: one writer's content survives, no temp file left") {
+    val dir = Files.createTempDirectory("graft-manifest-race")
+    val path = dir.resolve("stage").resolve("manifest.json").toString
+    val writers = 8
+    def fields(w: Int) = Map("stage" -> s"writer$w", "fingerprint" -> s"fp$w", "status" -> "complete")
+    def counters(w: Int) = (0 until 200).map(k => s"c$k" -> (w * 1000L + k)).toMap
+    def partitions(w: Int) = (0 until 50).map(p => (p, w * 100L + p))
+    val pool = Executors.newFixedThreadPool(writers)
+    val start = new CountDownLatch(1)
+    try {
+      val done = (0 until writers).map { w =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            (0 until 20).foreach(_ => Snapshots.writeManifest(path, fields(w), counters(w), partitions(w)))
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get(60, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+
+    val stage = Snapshots.readManifestField(path, "stage")
+    val w = stage.map(_.stripPrefix("writer").toInt)
+    assert(w.exists(i => i >= 0 && i < writers), s"unparseable manifest stage $stage")
+    val expected = Files.createTempDirectory("graft-manifest-one").resolve("manifest.json").toString
+    Snapshots.writeManifest(expected, fields(w.get), counters(w.get), partitions(w.get))
+    assert(Files.readString(Paths.get(path)) == Files.readString(Paths.get(expected)),
+      "the manifest mixes several writers' content")
+    val leftovers = Files.list(Paths.get(path).getParent).toArray.map(_.toString)
+      .filter(_.endsWith(".tmp"))
+    assert(leftovers.isEmpty, s"temp files left: ${leftovers.mkString(", ")}")
+  }
+}
