@@ -29,9 +29,10 @@ import graft.normalize.Normalize
 object Blocking {
 
   /** Default LSH operating point (b=16, r=6) chosen from the measured
-    * fixture Jaccard separation (LshTuneMain): negatives' char-3-gram
-    * Jaccard ≤ 0.23 (99.9th pct), positives ≥ 0.73 (0.1th pct) →
-    * P(candidate | J=0.73) ≈ 0.94, P(candidate | J=0.14) ≈ 1e-4. */
+    * fixture Jaccard separation (BENCH.md, "ER blocking LSH operating
+    * point"): negatives' char-3-gram Jaccard ≤ 0.23 (99.9th pct),
+    * positives ≥ 0.73 (0.1th pct) → P(candidate | J=0.73) ≈ 0.93,
+    * P(candidate | J=0.14) ≈ 1e-4. */
   case class Config(
       bands: Int = 16,
       rows: Int = 6,

@@ -5,13 +5,17 @@ import org.apache.spark.sql.SparkSession
 import graft.core.Sessions
 import graft.fixtures.Fixture
 import graft.pipeline.Linkage
+import graft.scoring.Scoring
 
 /** spark-submit entry point:
   *
   *   LinkageMain --input <pages.parquet | fixture:N> --out <workDir>
   *               [--resume] [--parallelism N] [--threshold T]
-  *               [--right <pages.parquet | split>]
+  *               [--right <pages.parquet | split>] [--eval]
   *               [--embeddings <vocab+matrix.parquet>]
+  *               [--composition average|idf]
+  *
+  * An argument it does not know fails the run before any work starts.
   *
   * `--embeddings` points the scorer at a REAL frozen-embedding artifact — a
   * Parquet table (token, id, vector), the engine's form of the reference's
@@ -29,8 +33,17 @@ import graft.pipeline.Linkage
   * spark-submit --num-executors.
   */
 object LinkageMain {
+  private val Compositions = Map("average" -> Scoring.Average, "idf" -> Scoring.Idf)
+
+  /** This main's command line: `--resume` and `--eval` switches, `--key value` options. */
+  private[cli] def parseArgs(args: Seq[String]): Map[String, String] =
+    parse(args,
+      flags = Set("resume", "eval"),
+      options = Set("input", "out", "parallelism", "threshold", "right", "embeddings", "composition"),
+      choices = Map("composition" -> Compositions.keySet))._1
+
   def main(args: Array[String]): Unit = {
-    val opts = parse(args.toList, Map.empty)
+    val opts = parseArgs(args.toSeq)
     val parallelism = opts.getOrElse("parallelism", "32").toInt
     val out = opts.getOrElse("out", "/tmp/graft-linkage")
     val input = opts.getOrElse("input", "fixture:10000")
@@ -41,10 +54,7 @@ object LinkageMain {
       if (input.startsWith("fixture:")) Fixture.pages(spark, input.stripPrefix("fixture:").toLong).toDF()
       else spark.read.parquet(input)
 
-    val composition = opts.get("composition") match {
-      case Some("idf") => graft.scoring.Scoring.Idf
-      case _ => graft.scoring.Scoring.Average
-    }
+    val composition = opts.get("composition").map(Compositions).getOrElse(Scoring.Average)
     // verify = true: externally supplied artifacts re-hash once at load so a
     // corrupted/doctored data file with a stale metadata fingerprint cannot
     // silently resume under the old fingerprint (round-6 ADVICE) — the
@@ -52,27 +62,28 @@ object LinkageMain {
     val embeddings = opts.get("embeddings")
       .map(p => graft.scoring.EmbeddingModel.fromParquet(spark, p, verify = true))
       .getOrElse(graft.scoring.EmbeddingModel.fixture)
+    val dataCfg = Linkage.Config(workDir = out, composition = composition, embeddings = embeddings)
+
+    // two-table mode profiles its weights from both tables
+    opts.get("right").foreach { rightSpec =>
+      runTwoTable(spark, opts, input, rightSpec, pages, dataCfg.copy(workDir = out + "/two_table"))
+      spark.stop()
+      return
+    }
+
     // auto-profile: the calibrated default bias assumes embedded media; a
     // low-coverage corpus hands the inactive image family's logit headroom
     // back to the bias (Scoring.Weights.forMediaCoverage). Coverage source,
     // in preference order: EXACT projected-manifest counters on a resume
     // (zero scans), else the bounded per-partition content sample.
-    val fpData = Linkage.fingerprintData(Linkage.Config(workDir = out,
-      composition = composition, embeddings = embeddings))
+    val fpData = Linkage.fingerprintData(dataCfg)
     val base = (if (resume) Linkage.mediaCoverageFromManifest(spark, out, fpData) else None)
-      .map(graft.scoring.Scoring.Weights.forMediaCoverage)
-      .getOrElse(graft.scoring.Scoring.Weights.profileFor(pages))
+      .map(Scoring.Weights.forMediaCoverage)
+      .getOrElse(Scoring.Weights.profileFor(pages))
     val weights = opts.get("threshold")
       .map(t => base.copy(threshold = t.toDouble))
       .getOrElse(base)
-    val cfg = Linkage.Config(workDir = out, resume = resume, weights = weights,
-      composition = composition, embeddings = embeddings)
-
-    opts.get("right").foreach { rightSpec =>
-      runTwoTable(spark, opts, input, rightSpec, pages, composition, embeddings)
-      spark.stop()
-      return
-    }
+    val cfg = dataCfg.copy(resume = resume, weights = weights)
 
     val t0 = System.nanoTime()
     val result = Linkage.run(spark, pages, cfg)
@@ -96,7 +107,7 @@ object LinkageMain {
         val withIds = labeled.toDF()
           .withColumn("id1", graft.blocking.Blocking.pageIdOf(col("url1")))
           .withColumn("id2", graft.blocking.Blocking.pageIdOf(col("url2")))
-        val scoredPairs = graft.scoring.Scoring
+        val scoredPairs = Scoring
           .score(spark, withIds.select("id1", "id2"), attrs, weights)
           .toDF().select(col("id1"), col("id2"), col("score"))
         val auroc = graft.eval.Eval.auroc(withIds
@@ -114,11 +125,11 @@ object LinkageMain {
     spark.stop()
   }
 
+  /** Two-table linkage of `pages` against `rightSpec` under `base` (work dir,
+    * composition, embeddings). */
   private def runTwoTable(spark: SparkSession, opts: Map[String, String],
                           input: String, rightSpec: String,
-                          pages: org.apache.spark.sql.DataFrame,
-                          composition: graft.scoring.Scoring.Composition,
-                          embeddings: graft.scoring.EmbeddingModel): Unit = {
+                          pages: org.apache.spark.sql.DataFrame, base: Linkage.Config): Unit = {
     import org.apache.spark.sql.functions._
     val (left, right) = rightSpec match {
       case "split" => // fixture benchmark: canonical copies vs duplicates
@@ -131,9 +142,8 @@ object LinkageMain {
     // family's bias headroom back even if the left table has html. On a
     // resume, each side's EXACT projected-manifest coverage is preferred
     // over the sampled measurement (min across sides — the bothImg gate).
-    val ttWorkDir = opts.getOrElse("out", "/tmp/graft-linkage") + "/two_table"
-    val fpData = Linkage.fingerprintDataTwoTable(Linkage.Config(
-      workDir = ttWorkDir, composition = composition, embeddings = embeddings))
+    val ttWorkDir = base.workDir
+    val fpData = Linkage.fingerprintDataTwoTable(base)
     val manifestCoverage =
       if (opts.contains("resume"))
         for {
@@ -141,19 +151,16 @@ object LinkageMain {
           r <- Linkage.mediaCoverageFromManifest(spark, ttWorkDir, fpData, "projected_r")
         } yield math.min(l, r)
       else None
-    val base = manifestCoverage
-      .map(graft.scoring.Scoring.Weights.forMediaCoverage)
-      .getOrElse(graft.scoring.Scoring.Weights.profileFor(left, right))
+    val profiled = manifestCoverage
+      .map(Scoring.Weights.forMediaCoverage)
+      .getOrElse(Scoring.Weights.profileFor(left, right))
     val weights = opts.get("threshold")
-      .map(t => base.copy(threshold = t.toDouble)).getOrElse(base)
+      .map(t => profiled.copy(threshold = t.toDouble)).getOrElse(profiled)
     val t0 = System.nanoTime()
     // snapshot-staged (resumable) two-table pipeline — same manifest
     // protocol as self-linkage; --resume skips completed stages
     val result = Linkage.runTwoTableStaged(spark, left, right,
-      Linkage.Config(
-        workDir = ttWorkDir,
-        resume = opts.contains("resume"),
-        weights = weights, composition = composition, embeddings = embeddings))
+      base.copy(resume = opts.contains("resume"), weights = weights))
     val matches = result.matches
     val nMatches = result.counters.getOrElse("matches.rows", matches.count())
     val secs = (System.nanoTime() - t0) / 1e9
@@ -215,14 +222,38 @@ object LinkageMain {
       s""""seconds":$secs""" + evalJson + "}")
   }
 
-  @annotation.tailrec
-  private def parse(args: List[String], acc: Map[String, String]): Map[String, String] =
-    args match {
-      case Nil => acc
-      case "--resume" :: rest => parse(rest, acc + ("resume" -> "true"))
-      case "--eval" :: rest => parse(rest, acc + ("eval" -> "true"))
-      case key :: value :: rest if key.startsWith("--") =>
-        parse(rest, acc + (key.stripPrefix("--") -> value))
-      case _ :: rest => parse(rest, acc)
-    }
+  /** The command-line parser of the graft mains. `--key` is a switch when
+    * `key` is in `flags` and takes the next argument as its value when it
+    * is in `options` (one of `choices(key)` where listed); bare words are
+    * returned in order when `positional`. Any other argument throws an
+    * IllegalArgumentException naming it, so a misspelt option fails instead
+    * of running with the defaults. Returns (key -> value, bare words), with
+    * switches mapped to "true". */
+  private[cli] def parse(args: Seq[String], flags: Set[String], options: Set[String],
+                         choices: Map[String, Set[String]] = Map.empty,
+                         positional: Boolean = false): (Map[String, String], Seq[String]) = {
+    def fail(msg: String) = throw new IllegalArgumentException(msg)
+    @annotation.tailrec
+    def go(rest: List[String], acc: Map[String, String],
+           words: Vector[String]): (Map[String, String], Seq[String]) =
+      rest match {
+        case Nil => (acc, words)
+        case arg :: tail if arg.startsWith("--") =>
+          val key = arg.stripPrefix("--")
+          if (flags(key)) go(tail, acc + (key -> "true"), words)
+          else if (!options(key)) fail(s"unknown option $arg")
+          else tail match {
+            case value :: more if !value.startsWith("--") =>
+              choices.get(key).filterNot(_(value)).foreach { allowed =>
+                fail(s"unknown value '$value' for $arg (one of ${allowed.toSeq.sorted.mkString(", ")})")
+              }
+              go(more, acc + (key -> value), words)
+            case _ => fail(s"$arg needs a value")
+          }
+        case word :: tail =>
+          if (!positional) fail(s"unexpected argument '$word'")
+          go(tail, acc, words :+ word)
+      }
+    go(args.toList, Map.empty, Vector.empty)
+  }
 }

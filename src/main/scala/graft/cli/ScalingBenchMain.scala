@@ -2,6 +2,8 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Sessions
+
 /** Two-cluster-size scaling evidence (BASELINE.md north rule): the same ER
   * job, same input, at local[N] vs local[4N] cores — the N-vs-4N-cores proxy
   * the sandbox supports cleanly (one JVM: shared JIT, no executor RPC, no
@@ -12,22 +14,10 @@ import org.apache.spark.sql.SparkSession
   * sbt "runMain graft.cli.ScalingBenchMain [nPages] [reps] [baseCores]". */
 object ScalingBenchMain {
 
-  private def sessionAt(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Same fixed-quantum multi-process substrate control as
-    * ClusterScalingMain — run adjacent to each leg at the leg's core count
-    * so the Spark ratio can be read against what the box did THAT minute. */
+  /** Fixed-quantum multi-process substrate control (`graft.Bench`'s
+    * `cpu_ctl_sec` protocol) — run adjacent to each leg at the leg's core
+    * count so the Spark ratio can be read against what the box did THAT
+    * minute. */
   private def cpuControl(procs: Int): Double = {
     val work = "i=0\nwhile i<120000000: i+=1"
     val t0 = System.nanoTime()
@@ -46,7 +36,7 @@ object ScalingBenchMain {
     val results = Seq(base, base * 4).map { cores =>
       val ctl = cpuControl(cores)
       println(f"[scaling] cores=$cores cpu-control($cores procs)=$ctl%.2f s")
-      val spark = sessionAt(cores)
+      val spark = Sessions.local(cores, s"graft-scaling-$cores")
       // small warm-up (JIT/codegen caches), then discarded full-size reps,
       // then min of `reps` measured runs (noise-robust on a shared VM)
       graft.Bench.erPipeline(spark, 100000L)

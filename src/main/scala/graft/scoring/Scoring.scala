@@ -191,16 +191,6 @@ object Scoring {
     idfWeightsFromNorm(spark,
       pages.select(Normalize.normText(col("text")).as("norm")), model)
 
-  /** Two-sided document frequencies, exactly the reference's shape
-    * (helpers.py:88-127 returns doc_freqs_1/doc_freqs_2 — one table per
-    * record SIDE, each side composed against ITS OWN dfs,
-    * Deeper.py:243-246). The self-linkage pipeline uses the single-corpus
-    * [[idfWeights]]; a two-table linkage (the reference's set1-vs-set2
-    * deployment) weights each side independently via this. */
-  def idfWeightsTwoSided(spark: SparkSession, left: DataFrame, right: DataFrame,
-                         model: EmbeddingModel = EmbeddingModel.fixture): (Map[Int, Double], Map[Int, Double]) =
-    (idfWeights(spark, left, model), idfWeights(spark, right, model))
-
   /** [[idfWeights]] over an already-normalized frame (column `norm`). */
   def idfWeightsFromNorm(spark: SparkSession, normed: DataFrame,
                          model: EmbeddingModel = EmbeddingModel.fixture): Map[Int, Double] = {

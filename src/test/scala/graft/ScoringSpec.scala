@@ -91,7 +91,9 @@ class ScoringSpec extends SparkSpec {
     val a = Fixture.pages(spark, half).toDF()
     val b = graft.fixtures.Fixture.pagesWithTruth(spark, 2 * half).toDF()
       .where(col("entity_id") >= 400).drop("entity_id")
-    val (wa, wb) = Scoring.idfWeightsTwoSided(spark, a, b)
+    // one table per record side, each side composed against its own dfs
+    // (helpers.py:88-127 doc_freqs_1/doc_freqs_2)
+    val (wa, wb) = (Scoring.idfWeights(spark, a), Scoring.idfWeights(spark, b))
     assert(wa.nonEmpty && wb.nonEmpty)
     // disjoint corpora → different df tables (some token differs in weight)
     assert(wa != wb)

@@ -45,7 +45,7 @@ class TwoTableSpec extends SparkSpec {
     assert(f1 >= 0.99, s"two-table F1 $f1 below gate (tp=$tp fp=$fp fn=$fn)")
   }
 
-  test("per-side IDF composition meets the gate (idfWeightsTwoSided consumed)") {
+  test("per-side IDF composition meets the gate") {
     val (f1, tp, fp, fn) =
       f1Of(Linkage.runTwoTable(spark, left, right, composition = Scoring.Idf))
     info(f"idf composition: F1=$f1%.4f tp=$tp fp=$fp fn=$fn")
