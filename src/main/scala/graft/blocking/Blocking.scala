@@ -1,9 +1,7 @@
 package graft.blocking
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.GraftFunctions
 import graft.normalize.Normalize
@@ -46,74 +44,16 @@ object Blocking {
   private val SaltSeed = 0xA5A5A5A5L
   private val DomSeed = 0xD0D0D0D0L
 
-  /** How many non-matching query executions the release listener tolerates
-    * before treating the consumer frame as abandoned and unpersisting anyway
-    * (a caller that builds a salted join lazily and never executes it must
-    * not pin block storage + a listener for the session lifetime). */
-  private val AbandonAfterMisses = 64
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Times the abandon path has force-released a consumer's caches this JVM
-    * (observability: an early release is CORRECT — the consumer recomputes
-    * uncached — but the cache's dedup benefit is silently lost; a busy
-    * pipeline interleaving many small actions between building a pairs frame
-    * and running it shows up here and in the WARN log, round-4 ADVICE). */
-  val abandonedReleases = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Scope `cached` (already persisted) to the first execution of its
-    * CONSUMING plan(s): a QueryExecutionListener unpersists the caches once
-    * every frame in `consumers` has appeared in an executed plan (success or
-    * failure).
-    *
-    * Why: the salted-join entries feed two consumers (block sizes + the
-    * size join) and the sized entries four (both cross-salt roles + both
-    * same-salt sides) inside a single materialization — that is what the
-    * caches deduplicate. But a plain .persist() pins the entry in the
-    * session CacheManager FOREVER; repeated dedup-operator calls in a
-    * long-lived session accumulate pinned block storage until eviction
-    * pressure or OOM (round-2 ADVICE). Matching on the CONSUMER plan (the
-    * pairs frame), not the cached subtree, means an earlier unrelated action
-    * over the entries (a blockStats count, say) reads the cache WITHOUT
-    * releasing it early (round-3 ADVICE). A consumer never executed at all
-    * releases after [[AbandonAfterMisses]] unrelated executions — bounded
-    * leak, and a late re-execution simply recomputes (correct, uncached). */
-  private[graft] def releaseAfterConsumed(cached: Seq[DataFrame], consumers: Seq[DataFrame],
-                                          maxMisses: Int = AbandonAfterMisses): Unit = {
-    val spark = cached.head.sparkSession
-    val listener: QueryExecutionListener = new QueryExecutionListener {
-      private var remaining = consumers.map(_.queryExecution.analyzed)
-      private var misses = 0
-      private var done = false
-      private def release(): Unit =
-        if (!done) {
-          done = true
-          cached.foreach(_.unpersist(blocking = false))
-          spark.listenerManager.unregister(this)
-        }
-      private def maybeRelease(qe: QueryExecution): Unit = synchronized {
-        if (done) return
-        val left = remaining.filterNot(t => qe.analyzed.exists(_.sameResult(t)))
-        if (left.size == remaining.size) misses += 1
-        remaining = left
-        // all consumers seen, or the frame was abandoned: stop pinning
-        // storage + this listener either way
-        if (remaining.nonEmpty && misses >= maxMisses) {
-          // correct but observable: the consumer will recompute uncached
-          abandonedReleases.incrementAndGet()
-          log.warn(s"salted-join entry cache force-released after $misses unrelated " +
-            s"executions with ${remaining.size} consumer(s) never run — a late " +
-            "execution recomputes without the cache's dedup benefit")
-        }
-        if (remaining.isEmpty || misses >= maxMisses) release()
-      }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        maybeRelease(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        maybeRelease(qe)
-    }
-    spark.listenerManager.register(listener)
-  }
+  /** Materializes `df` once for a grid's several consumers, lazily, with
+    * a local checkpoint (the engine's idiom for in-memory intermediates, as
+    * in Linkage's in-memory runner and ConnectedComponents). It adds no
+    * CacheManager entry, so it can never drop a caller's own cache of the
+    * same plan; its blocks live as long as the returned frame is reachable,
+    * then Spark's ContextCleaner frees them. Under AQE the shuffle stages
+    * below the checkpoint run when it is planned, i.e. at the call; the rows
+    * above the last shuffle are computed and stored by the first action. */
+  private def materialized(df: DataFrame, on: Boolean): DataFrame =
+    if (on) df.localCheckpoint(eager = false) else df
 
   /** Seed decorrelating the second id lane from the first (golden-ratio
     * constant — any fixed value distinct from Spark's default 42 works). */
@@ -197,32 +137,31 @@ object Blocking {
     *
     * Output is NOT deduped across block keys — callers with multi-key rows
     * (LSH bands) follow with dropDuplicates(id1, id2).
+    *
+    * `persistEntries` (every Dedup operator): materialize the entries and
+    * the sized entries with a local checkpoint. Under AQE that runs the
+    * shuffle stages below each checkpoint when the grid is built, so the
+    * CALL already reads the input and aggregates its block sizes, before
+    * any action on the returned pairs.
     */
   def saltedSelfJoinPairs(entries: DataFrame, cap: Int, maxBlock: Int,
                           payload: Seq[String] = Nil,
                           persistEntries: Boolean = true,
                           gridRows: Option[Long] = None): DataFrame = {
-    // Two caches when the entries are computed in the plan (persistEntries,
-    // every Dedup operator): the ENTRIES, so the upstream key computation
+    // Two materializations when the entries are computed in the plan
+    // (persistEntries): the ENTRIES, so the upstream key computation
     // (minhash bands, simhash fingerprints, gram arrays) runs once for the
     // size aggregate and the size join, and the SIZED entries, so the grid's
     // four legs (two cross-salt roles, two same-salt sides) read one sized
     // table instead of each re-shuffling the entries, re-aggregating block
-    // sizes and redoing the size join. Exchange reuse does not dedup those
-    // four copies: legs reading an InMemoryRelation never shared an exchange
-    // here (measured: four size aggregates and four size joins per grid, no
-    // ReusedExchange). Both caches live until the first action consuming the
-    // PAIRS frame, then auto-release (releaseAfterConsumed on the output
-    // below; derived cache first, so uncaching the entries never re-plans
-    // it). Callers whose entries are already materialized (the ER pipeline's
-    // snapshot-backed blocks) opt out of both: there caching the sized table
-    // measured no faster than re-scanning the input (6,000-page staged
+    // sizes and redoing the size join (measured without it: four size
+    // aggregates and four size joins per grid, no ReusedExchange). Callers
+    // whose entries are already materialized (the ER pipeline's
+    // snapshot-backed blocks) opt out of both: there materializing the sized
+    // table measured no faster than re-scanning the input (6,000-page staged
     // linkage on 4 cores).
-    def cached(df: DataFrame) =
-      if (persistEntries) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val e = cached(entries)
-    val sized = cached(sizedEntries(e, cap, maxBlock, payload))
+    val e = materialized(entries, persistEntries)
+    val sized = materialized(sizedEntries(e, cap, maxBlock, payload), persistEntries)
     val lid = col("l.id"); val rid = col("r.id")
     // cross-salt: canonicalize ids (role assignment is salt-order, not
     // id-order), payloads follow their row
@@ -280,9 +219,7 @@ object Blocking {
         col("l.block_key") === col("r.block_key") &&
         col("l.salt") === col("r.salt") && lid < rid)
       .select(sameCols: _*)
-    val out = cross.unionByName(same)
-    if (persistEntries) releaseAfterConsumed(Seq(sized, e), Seq(out))
-    out
+    cross.unionByName(same)
   }
 
   /** Measured-optimal grid rows per task: the round-6 protocol A/Bs read the
@@ -367,7 +304,7 @@ object Blocking {
       // same-salt direct join covers all their pairs
       .where(col("k") > 1)
       .withColumn("bucket", explode(buckets))
-      // canonical field nullability — see crossBucketsRaw.replicate: a
+      // canonical field nullability — see crossBuckets.replicate: a
       // role-side mismatch would cast the join key and stack a second
       // exchange on the numbered grid repartition
       .select((col("block_key") +:
@@ -395,22 +332,26 @@ object Blocking {
     * `block_key` become candidate pairs (id1 from left, id2 from right; no
     * `id1 < id2` canonicalization — the sides are distinct).
     *
-    * Skew handling is the 2-D analog of the triangle: a block with nL left /
-    * nR right rows gets a kL×kR bucket grid (k = ceil(n/cap) per side); a
-    * left row with salt x replicates to buckets {(x, b) : b < kR}, a right
-    * row with salt y to {(a, y) : a < kL}, so every (L, R) pair co-occurs in
-    * EXACTLY one bucket (x, y) and no join task co-joins more than ~2·cap
-    * rows — full coverage, bounded tasks. Blocks above maxBlock on EITHER
-    * side are dropped entirely (counted via [[blockStats]] per side, never
-    * silent); keys present on only one side never join at all (the inner
-    * size-join prunes them before any replication). */
+    * Skew handling is the 2-D analog of the self-join's salt grid: a block
+    * with nL left / nR right rows gets a kL×kR bucket grid (k = ceil(n/cap)
+    * per side); a left row with salt x replicates to buckets {(x, b) : b <
+    * kR}, a right row with salt y to {(a, y) : a < kL}, so every (L, R) pair
+    * co-occurs in EXACTLY one bucket (x, y) and no join task co-joins more
+    * than ~2·cap rows — full coverage, bounded tasks. Blocks above maxBlock
+    * on EITHER side are dropped entirely (counted via [[blockStats]] per
+    * side, never silent); keys present on only one side never join at all
+    * (the inner size-join prunes them before any replication).
+    *
+    * `persistLeft`/`persistRight`: materialize that side with a local
+    * checkpoint (it feeds two consumers, its size aggregate and its
+    * replication). A side that is snapshot-backed parquet, or cached by the
+    * caller, is cheaper to re-scan: pass false. */
   def saltedCrossJoinPairs(left: DataFrame, right: DataFrame, cap: Int, maxBlock: Int,
                            payload: Seq[String] = Nil,
                            persistLeft: Boolean = true,
                            persistRight: Boolean = true,
                            gridRows: Option[Long] = None): DataFrame = {
-    val (l, r, release) = crossBucketsRaw(left, right, cap, maxBlock, payload,
-      persistLeft, persistRight)
+    val (l, r) = crossBuckets(left, right, cap, maxBlock, payload, persistLeft, persistRight)
     val outCols = col("l.id").as("id1") +: col("r.id").as("id2") +:
       payload.flatMap(p => Seq(col(s"l.$p").as(s"${p}_1"), col(s"r.$p").as(s"${p}_2")))
     // shuffle_hash-hinted + numbered-repartitioned on the full grid key for
@@ -422,43 +363,21 @@ object Blocking {
     val n = gridPartitions(left, gridRows)
     val lp = l.repartition(n, col("block_key"), col("bucket"))
     val rp = r.repartition(n, col("block_key"), col("bucket"))
-    val out = lp.as("l").hint("shuffle_hash").join(rp.as("r"),
+    lp.as("l").hint("shuffle_hash").join(rp.as("r"),
         col("l.block_key") === col("r.block_key") &&
         col("l.bucket") === col("r.bucket"))
       .select(outCols: _*)
-    release(Seq(out))
-    out
   }
 
-  /** The replicated bucket tables behind [[saltedCrossJoinPairs]] — exposed
-    * for the planted-hot-block bound test (rows per (block_key, bucket)
-    * across both sides ≤ ~2·cap). */
+  /** The replicated bucket tables behind [[saltedCrossJoinPairs]] — also
+    * exposed for the planted-hot-block bound test (rows per (block_key,
+    * bucket) across both sides ≤ ~2·cap). */
   private[graft] def crossBuckets(left: DataFrame, right: DataFrame, cap: Int,
                                   maxBlock: Int, payload: Seq[String] = Nil,
-                                  persistEntries: Boolean = true): (DataFrame, DataFrame) = {
-    val (l, r, release) = crossBucketsRaw(left, right, cap, maxBlock, payload,
-      persistEntries, persistEntries)
-    release(Seq(l, r)) // direct callers consume the bucket tables themselves
-    (l, r)
-  }
-
-  /** [[crossBuckets]] plus the deferred cache-release hook: the caller names
-    * the frame(s) whose first execution ends the entries caches' lifetime.
-    * Persist is PER SIDE: each side feeds two consumers here (its sizes
-    * aggregate + its replication), but a side that is snapshot-backed parquet
-    * (or cached by the caller) is cheaper to re-scan than to materialize into
-    * executor storage — and persist()-then-unpersist() on a caller-supplied
-    * plan would silently drop the CALLER's own cache of the same plan
-    * (CacheManager dedups by plan, round-4 ADVICE). */
-  private def crossBucketsRaw(left: DataFrame, right: DataFrame, cap: Int,
-                              maxBlock: Int, payload: Seq[String],
-                              persistLeft: Boolean, persistRight: Boolean):
-      (DataFrame, DataFrame, Seq[DataFrame] => Unit) = {
-    def persisted(df: DataFrame, on: Boolean) =
-      if (on) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val le = persisted(left, persistLeft)
-    val re = persisted(right, persistRight)
+                                  persistLeft: Boolean = true,
+                                  persistRight: Boolean = true): (DataFrame, DataFrame) = {
+    val le = materialized(left, persistLeft)
+    val re = materialized(right, persistRight)
     // nl×nr hinted too: both aggregates are distinct-block-scale (corpus-
     // bound), and estimate-tiny lineage otherwise plans a broadcast build
     val sizes = le.groupBy("block_key").agg(count(lit(1)).as("nl"))
@@ -485,12 +404,8 @@ object Blocking {
         .select((col("block_key") +:
           col("bucket").cast("struct<x:int,y:int>").as("bucket") +:
           ("id" +: payload).map(col)): _*)
-    val l = replicate(le, "kl", "kr", (own, other) => struct(own.as("x"), other.as("y")))
-    val r = replicate(re, "kr", "kl", (own, other) => struct(other.as("x"), own.as("y")))
-    val cached = (if (persistLeft) Seq(le) else Nil) ++ (if (persistRight) Seq(re) else Nil)
-    val release: Seq[DataFrame] => Unit =
-      consumers => if (cached.nonEmpty) releaseAfterConsumed(cached, consumers)
-    (l, r, release)
+    (replicate(le, "kl", "kr", (own, other) => struct(own.as("x"), other.as("y"))),
+      replicate(re, "kr", "kl", (own, other) => struct(other.as("x"), own.as("y"))))
   }
 
   /** Incremental candidate pairs for continuous ingest: given the
@@ -518,26 +433,41 @@ object Blocking {
     * final over-cap block list before CC (blockStats exposes it). Pinned by
     * BlockingSpec "deltaPairs maxBlock crossing".
     *
-    * Cache policy: the semi-joined NEW side (small, derived here — no caller
-    * holds its plan) is persisted for its in-join consumers; the ACCUMULATED
-    * side is NOT persisted by default (`persistAccum = false`) — in the
-    * continuous-ingest pattern it is a snapshot-backed parquet table (or a
-    * frame the caller already caches across batches), and at the 100-TB
-    * north star materializing the full accumulated table into executor
-    * storage per scheduled batch costs strictly more than its two re-scans.
-    * The old always-persist default was also a footgun: persist()+release on
-    * the CALLER's own plan silently dropped the caller's cross-batch cache
-    * (CacheManager dedups by plan — round-4 ADVICE). */
+    * Materialization: only the semi-joined NEW side (small, derived here —
+    * no caller holds its plan) is checkpointed for its in-join consumers.
+    * The ACCUMULATED side is re-scanned: in the continuous-ingest pattern it
+    * is a snapshot-backed parquet table (or a frame the caller already
+    * caches across batches), and at the 100-TB north star materializing the
+    * full accumulated table per scheduled batch costs strictly more than its
+    * two re-scans. */
   def deltaPairs(accumBlocks: DataFrame, newIds: DataFrame,
-                 cfg: Config = Config(), persistAccum: Boolean = false): DataFrame =
+                 cfg: Config = Config()): DataFrame =
     saltedCrossJoinPairs(
         accumBlocks.join(newIds.select("id").distinct(), Seq("id"), "left_semi"),
         accumBlocks, cfg.cap, cfg.maxBlock,
-        persistLeft = true, persistRight = persistAccum)
+        persistLeft = true, persistRight = false)
       .where(col("id1") =!= col("id2"))
       .select(least(col("id1"), col("id2")).as("id1"),
         greatest(col("id1"), col("id2")).as("id2"))
       .dropDuplicates("id1", "id2")
+
+  /** Block-size table of a block-entry frame: (block_key, n) — the shape the
+    * two-table over-cap gate consumes, and the shape a caller maintains
+    * INCREMENTALLY across scheduled batches via [[mergedBlockSizes]] so the
+    * gate stops re-aggregating the full accumulated tables per batch. */
+  def blockSizes(entries: DataFrame): DataFrame =
+    entries.groupBy("block_key").agg(count(lit(1)).as("n"))
+
+  /** Incrementally maintained block sizes: previous accumulated sizes plus
+    * this batch's entry counts (outer sum — keys new this batch appear, keys
+    * untouched keep their old count). `prevSizes` is tiny relative to the
+    * accumulated ENTRY table (one row per distinct block), so maintaining it
+    * per batch costs a delta-sized aggregate + a sizes-sized merge instead
+    * of a full accumulated-table scan. Exactly equal to
+    * [[blockSizes]](accumulated ∪ batch) — pinned by TwoTableSpec. */
+  def mergedBlockSizes(prevSizes: DataFrame, batchEntries: DataFrame): DataFrame =
+    prevSizes.unionByName(blockSizes(batchEntries))
+      .groupBy("block_key").agg(sum(col("n")).as("n"))
 
   /** Two-table incremental candidate pairs (the A×B analog of [[deltaPairs]]):
     * given each side's ACCUMULATED block table and the ids newly ingested on
@@ -558,10 +488,10 @@ object Blocking {
     * stand). Sides keep their identity: id1 ∈ left, id2 ∈ right, no
     * canonicalization.
     *
-    * Cache policy mirrors [[deltaPairs]]: only the small DERIVED new-side
-    * frames persist; the accumulated tables (snapshot-backed in the intended
-    * pattern) are re-scanned, and a caller-managed cross-batch cache is
-    * never dropped.
+    * Materialization mirrors [[deltaPairs]]: only the small DERIVED new-side
+    * frames are checkpointed; the accumulated tables (snapshot-backed in the
+    * intended pattern) are re-scanned, and a caller-managed cross-batch
+    * cache is never dropped.
     *
     * maxBlock is enforced on the ACCUMULATED per-side sizes, not each leg's
     * input frames (round-5 ADVICE): the legs see only slices of the tables
@@ -574,24 +504,6 @@ object Blocking {
     * accumulated side), and the inner gate is disabled: a leg-input block is
     * always ≤ its accumulated block, so after the prefilter the inner gate
     * could never fire. */
-  /** Block-size table of a block-entry frame: (block_key, n) — the shape the
-    * two-table over-cap gate consumes, and the shape a caller maintains
-    * INCREMENTALLY across scheduled batches via [[mergedBlockSizes]] so the
-    * gate stops re-aggregating the full accumulated tables per batch. */
-  def blockSizes(entries: DataFrame): DataFrame =
-    entries.groupBy("block_key").agg(count(lit(1)).as("n"))
-
-  /** Incrementally maintained block sizes: previous accumulated sizes plus
-    * this batch's entry counts (outer sum — keys new this batch appear, keys
-    * untouched keep their old count). `prevSizes` is tiny relative to the
-    * accumulated ENTRY table (one row per distinct block), so maintaining it
-    * per batch costs a delta-sized aggregate + a sizes-sized merge instead
-    * of a full accumulated-table scan. Exactly equal to
-    * [[blockSizes]](accumulated ∪ batch) — pinned by TwoTableSpec. */
-  def mergedBlockSizes(prevSizes: DataFrame, batchEntries: DataFrame): DataFrame =
-    prevSizes.unionByName(blockSizes(batchEntries))
-      .groupBy("block_key").agg(sum(col("n")).as("n"))
-
   def deltaPairsTwoTable(accumLeft: DataFrame, accumRight: DataFrame,
                          newIdsLeft: DataFrame, newIdsRight: DataFrame,
                          cfg: Config = Config(),
@@ -605,25 +517,21 @@ object Blocking {
     // across batches ([[mergedBlockSizes]] — the round-6 VERDICT efficiency
     // ask: at the 100-TB north star two full accumulated groupBy passes per
     // scheduled batch dominate a small delta), the gate reads THOSE instead
-    // of re-aggregating the accumulated entry tables. PERSISTED for the
-    // call's duration: the gate subtree is embedded in all four leg inputs
-    // across two separately planned joins, and cross-plan exchange reuse is
-    // not guaranteed — an unpersisted gate could re-aggregate its input up
-    // to 4× per batch. It is a frame this function DERIVES (not
-    // caller-supplied), so the persist cannot clobber a caller's cache;
-    // released by the same consumer-scoped listener the salted-join entry
-    // caches use.
-    val (gate, overCapCache) =
+    // of re-aggregating the accumulated entry tables. Materialized once per
+    // call: the gate subtree is embedded in all four leg inputs across two
+    // separately planned joins, and cross-plan exchange reuse is not
+    // guaranteed — unmaterialized it could re-aggregate its input up to 4×
+    // per batch.
+    val gate: DataFrame => DataFrame =
       if (cfg.maxBlock > 0) {
         def over(accum: DataFrame, sizes: Option[DataFrame]) =
           sizes.getOrElse(blockSizes(accum))
             .where(col("n") > cfg.maxBlock).select("block_key")
-        val overCap = over(accumLeft, sizesLeft)
-          .unionByName(over(accumRight, sizesRight)).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ((e: DataFrame) => e.join(overCap, Seq("block_key"), "left_anti"),
-          Some(overCap))
-      } else (identity[DataFrame] _, None)
+        val overCap = materialized(
+          over(accumLeft, sizesLeft).unionByName(over(accumRight, sizesRight)).distinct(),
+          on = true)
+        _.join(overCap, Seq("block_key"), "left_anti")
+      } else identity
     val aLeft = gate(accumLeft)
     val aRight = gate(accumRight)
     val newL = aLeft.join(nl, Seq("id"), "left_semi")
@@ -633,9 +541,7 @@ object Blocking {
       persistLeft = true, persistRight = false)
     val bNew = saltedCrossJoinPairs(oldL, newR, cfg.cap, maxBlock = 0,
       persistLeft = false, persistRight = true)
-    val out = aNew.unionByName(bNew).dropDuplicates("id1", "id2")
-    overCapCache.foreach(oc => releaseAfterConsumed(Seq(oc), Seq(out)))
-    out
+    aNew.unionByName(bNew).dropDuplicates("id1", "id2")
   }
 
   /** ER candidate pairs: the salted self-join over the MinHash+domain block

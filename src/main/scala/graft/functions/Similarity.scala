@@ -381,17 +381,20 @@ object Similarity {
     override def initialValue(): Array[Long] = new Array[Long](SeenCap)
   }
 
-  /** True if h0 was already seen this row (then skip its remixes); inserts
-    * otherwise. `seen` must be zero-filled at row start. */
-  private def seenBefore(seen: Array[Long], occupancy: Int, h0: Long): Boolean = {
-    if (h0 == 0L) return false
+  private final val SeenHit = -1
+
+  /** [[SeenHit]] if h0 was already seen this row (skip its remixes); else
+    * the number of entries inserted: 1, or 0 when h0 == 0 or the table is at
+    * [[SeenMax]]. Callers add it to the row's occupancy, so only real
+    * inserts count. `seen` must be zero-filled at row start. */
+  private def seenProbe(seen: Array[Long], occupancy: Int, h0: Long): Int = {
+    if (h0 == 0L) return 0
     var slot = (h0 & SeenMask).toInt
     while (seen(slot) != 0L) {
-      if (seen(slot) == h0) return true
+      if (seen(slot) == h0) return SeenHit
       slot = (slot + 1) & SeenMask
     }
-    if (occupancy < SeenMax) seen(slot) = h0
-    false
+    if (occupancy < SeenMax) { seen(slot) = h0; 1 } else 0
   }
 
   /** One-pass MinHash-LSH band keys over character (byte) 3-gram shingles.
@@ -423,8 +426,9 @@ object Similarity {
       val last = n - 3
       while (i <= last) {
         val h0 = XXH64.hashUnsafeBytes(base, off + i, 3, seed)
-        if (!seenBefore(seen, occ, h0)) {
-          occ += 1
+        val probe = seenProbe(seen, occ, h0)
+        if (probe != SeenHit) {
+          occ += probe
           var j = 0
           while (j < k) {
             val h = XXH64.hashLong(h0, seed + GOLDEN * (j + 1))
@@ -477,8 +481,9 @@ object Similarity {
         if (i > start) {
           any = true
           val h0 = XXH64.hashUnsafeBytes(base, off + start, i - start, seed)
-          if (!seenBefore(seen, occ, h0)) {
-            occ += 1
+          val probe = seenProbe(seen, occ, h0)
+          if (probe != SeenHit) {
+            occ += probe
             var j = 0
             while (j < k) {
               val h = XXH64.hashLong(h0, seed + GOLDEN * (j + 1))

@@ -17,13 +17,20 @@ import graft.functions.GraftFunctions
   *  - embedding cosine: SRP-LSH bucketed near-duplicate vectors
   *
   * Every pair-generating operator routes through
-  * [[Blocking.saltedSelfJoinPairs]]: a hot band/chunk/block key is triangle-
-  * salted into ceil(n/cap) buckets, so no single join task ever co-joins more
-  * than ~2·cap rows — the quadratic-hot-bucket failure mode at 10^9 docs is
-  * bounded by construction, with zero recall loss. Oversized blocks can
-  * additionally be dropped (maxBlock > 0, counted via [[Blocking.blockStats]],
-  * never silent); the exact-result operators default to maxBlock = 0, and the
-  * first-collision operators (minhash, hamming/simhash) reject maxBlock > 0.
+  * [[Blocking.saltedSelfJoinPairs]]: a hot band/chunk/block key is split
+  * into ceil(n/cap) salts over the two-role salt grid, so no single join task
+  * ever co-joins more than ~2·cap rows — the quadratic-hot-bucket failure
+  * mode at 10^9 docs is bounded by construction, with zero recall loss.
+  * Oversized blocks can additionally be dropped (maxBlock > 0, counted via
+  * [[Blocking.blockStats]], never silent); the exact-result operators default
+  * to maxBlock = 0, and the first-collision operators (minhash,
+  * hamming/simhash) reject maxBlock > 0.
+  *
+  * The grid materializes its entries with a lazy local checkpoint, freed
+  * once the returned frame is unreachable. Under AQE a lazy checkpoint runs
+  * the shuffle stages below it when it is planned, so a pair-generating
+  * operator call already reads its input and aggregates the block sizes
+  * before any action on its result.
   */
 object Dedup {
 
@@ -206,7 +213,7 @@ object Dedup {
 
   /** Near-duplicate pairs by token n-gram Jaccard ≥ tau, blocked by
     * `blockCols` (never all-pairs: the self-join is block-local AND salted —
-    * an `(en, web)`-sized hot block is triangle-split across tasks). The
+    * an `(en, web)`-sized hot block is salt-split across tasks). The
     * size-ratio prefilter (J ≥ τ ⇒ |A|/|B| ∈ [τ, 1/τ]) prunes pairs before
     * the array intersect without changing the result. */
   def ngramJaccardPairs(df0: DataFrame, idCol: String, textCol: String,
@@ -381,7 +388,7 @@ object Dedup {
 
   /** The (block_key = SRP bucket, id) entry table behind [[embeddingNearDup]]
     * — exposed so the planted-dense-bucket bound test can assert the per-task
-    * row bound the triangle salting guarantees. */
+    * row bound the salt grid guarantees. */
   private[graft] def embeddingEntries(df: DataFrame, idCol: String, vecCol: String,
                                       nBits: Int, seed: Long): DataFrame = {
     val bucket =

@@ -258,19 +258,12 @@ object Linkage {
     val blocks = perSide("blocks", w => Blocking.blockStats(w, cfg.blocking), dayPart)(i =>
       Blocking.blockTableFromProjected(projected(i), cfg.blocking))
 
-    // abandoned_releases: entry caches force-released because a consumer
-    // plan never executed during the pairs stage (JVM-wide delta — 0 on the
-    // pipeline's own path, which opts out of persist; nonzero means some
-    // concurrent Blocking caller lost its cache's dedup benefit)
-    val abandoned0 = Blocking.abandonedReleases.get()
     // grid partition floor from the blocks manifests' row counters (free —
     // recorded at snapshot write, read back on resume; both cross-join legs
     // replicate through the same grid exchanges, so size by their sum)
     def gridRows = sides.map(s => runner.counters.get(s"blocks$s.rows").filter(_ > 0))
       .reduce((a, b) => for (x <- a; y <- b) yield x + y)
-    val pairs = runner.stage("pairs", fpData, _ =>
-      Map("abandoned_releases" -> (Blocking.abandonedReleases.get() - abandoned0)),
-      checkpoint = false) {
+    val pairs = runner.stage("pairs", fpData, checkpoint = false) {
       if (self) Blocking.candidatePairs(blocks.head, cfg.blocking, gridRows)
       else Blocking.saltedCrossJoinPairs(blocks.head, blocks.last, cfg.blocking.cap,
           cfg.blocking.maxBlock, persistLeft = false, persistRight = false, gridRows = gridRows)

@@ -115,49 +115,48 @@ class BlockingSpec extends SparkSpec {
     assert(Blocking.candidatePairs(entries(Seq(1, 2, 3, 4, 5, 6)), cfg).count() == 0)
   }
 
-  test("salted-join entries cache auto-releases after the first action") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
-    val entries = spark.range(2000).select(pmod($"id", lit(7)).as("block_key"), $"id")
-    // persistEntries = true (the default): the entries frame and the sized
-    // entries derived from it are cached for the duration of ONE
-    // materialization, then the one-shot listener drops both — repeated
-    // operator calls must NOT accumulate pinned block storage
-    val plans = ExecutedPlans.capture(spark) {
-      Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0).count()
-    }
-    val caches = plans.flatMap(ExecutedPlans.caches)
-    assert(caches.size == 2, s"expected the entries and sized-entries caches, read ${caches.size}")
-    val deadline = System.currentTimeMillis + 15000
-    def leaked = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
-    while (leaked > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
-    assert(leaked == 0, s"$leaked cached RDD(s) still pinned after the action")
-    assert(caches.forall(!_.cacheBuilder.isCachedColumnBuffersLoaded), "a grid cache outlived its consumer")
+  /** Size aggregates and cache reads over every plan `body` executes,
+    * reduced to counts here so no captured plan (which holds the grid's
+    * checkpointed RDDs) outlives the call. */
+  private def gridReads(body: => Unit): (Int, Int) = {
+    val plans = ExecutedPlans.capture(spark)(body)
+    (plans.map(ExecutedPlans.sizeAggregates).sum, plans.map(ExecutedPlans.caches(_).size).sum)
   }
 
-  test("entries cache survives unrelated actions; only the consuming plan releases it") {
-    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
-    def extra = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
-    val entries = spark.range(1500).select(pmod($"id", lit(3)).as("block_key"), $"id")
-    val pairs = Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0)
-    // an action over the ENTRIES subtree alone (the blockStats shape) must
-    // NOT release the cache — it predates the multi-consumer pairs join the
-    // cache exists for (round-3 ADVICE: subtree matching released here)
-    entries.count() // materializes the cache as a side effect
-    assert(extra > 0, "entries were never cached")
-    spark.range(5).count() // unrelated query: no release either
-    Thread.sleep(300)
-    assert(extra > 0, s"cache released by a non-consuming action")
-    // the consuming plan: NOW it releases — the entries cache and the sized
-    // cache it materialized along the way
-    val plans = ExecutedPlans.capture(spark)(pairs.count())
-    val caches = plans.flatMap(ExecutedPlans.caches)
-    assert(caches.size == 2, s"expected the entries and sized-entries caches, read ${caches.size}")
-    val deadline = System.currentTimeMillis + 15000
-    while (extra > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
-    assert(extra == 0, s"$extra cached RDD(s) still pinned after the consuming action")
-    assert(caches.forall(!_.cacheBuilder.isCachedColumnBuffersLoaded), "a grid cache outlived its consumer")
+  test("grid inputs: materialized once, freed once the result is unreachable") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // persistEntries = true (the default): the entries and the sized entries
+    // are local checkpoints, not CacheManager entries, and the grid's four
+    // legs read one sized table: one size aggregate across the whole call
+    val (aggregates, caches) = gridReads {
+      val entries = spark.range(2000).select(pmod($"id", lit(7)).as("block_key"), $"id")
+      assert(Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0).count() > 0)
+      assert(ExecutedPlans.pinnedSince(spark, before) > 0, "the grid materialized nothing")
+    }
+    assert(caches == 0, s"the grid read $caches CacheManager entries")
+    assert(aggregates == 1, s"$aggregates size aggregates across the call")
+    // repeated operator calls must not accumulate pinned block storage
+    val pinned = ExecutedPlans.awaitUnpinned(spark, before)
+    assert(pinned == 0, s"$pinned grid input(s) still pinned after the pairs frame was dropped")
+  }
+
+  test("a held pairs frame re-executes without re-aggregating") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def secondAction(): (Int, Int) = {
+      val entries = spark.range(1500).select(pmod($"id", lit(3)).as("block_key"), $"id")
+      val pairs = Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0)
+      val n = pairs.count()
+      spark.range(5).count() // unrelated query in between
+      val (aggregates, _) = gridReads(assert(pairs.count() == n))
+      (aggregates, ExecutedPlans.pinnedSince(spark, before))
+    }
+    val (aggregates, held) = secondAction()
+    // the second action reads the stored sized entries: no size aggregate,
+    // and the inputs stay pinned while the frame is held
+    assert(aggregates == 0, s"the second action ran $aggregates size aggregates")
+    assert(held > 0, "the held frame's grid inputs were freed")
+    val pinned = ExecutedPlans.awaitUnpinned(spark, before)
+    assert(pinned == 0, s"$pinned grid input(s) still pinned after the pairs frame was dropped")
   }
 
   test("candidatePairs (persistEntries = false) persists nothing") {
@@ -173,26 +172,6 @@ class BlockingSpec extends SparkSpec {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).isEmpty)
   }
 
-  test("abandoned consumer: cache force-releases after bounded misses, and the abandon is counted") {
-    val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
-    def extra = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
-    val abandonsBefore = Blocking.abandonedReleases.get()
-    val cached = spark.range(800).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached.count() // materialize
-    assert(extra > 0)
-    val consumer = cached.select(($"id" * 2).as("id2")) // never executed
-    Blocking.releaseAfterConsumed(Seq(cached), Seq(consumer), maxMisses = 3)
-    (1 to 3).foreach(_ => spark.range(7).count()) // unrelated churn
-    val deadline = System.currentTimeMillis + 15000
-    while (extra > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
-    assert(extra == 0, s"$extra cached RDD(s) pinned by an abandoned consumer")
-    // the early release is correct but must be OBSERVABLE (round-4 ADVICE):
-    // a late execution recomputes uncached, and nothing else signals that
-    assert(Blocking.abandonedReleases.get() > abandonsBefore,
-      "abandon-path release fired without incrementing the counter")
-  }
-
   test("deltaPairs default: accumulated side stays uncached; a caller-managed cache survives") {
     import org.apache.spark.storage.StorageLevel
     val cfg = Blocking.Config(cap = 64, maxBlock = 0)
@@ -203,19 +182,13 @@ class BlockingSpec extends SparkSpec {
     assert(accum.storageLevel == StorageLevel.NONE,
       "deltaPairs persisted the accumulated side despite the opt-out default")
     // a continuous-ingest caller keeping its own cross-batch cache must not
-    // lose it to the operator's internal persist/release cycle (round-4
-    // ADVICE: persist()+unpersist() on the caller's plan dropped it)
+    // lose it to the operator's own materialization of the new side
+    // (round-4 ADVICE: persist()+unpersist() on the caller's plan dropped it)
     val cached = accum.persist(StorageLevel.MEMORY_AND_DISK)
     cached.count()
     Blocking.deltaPairs(cached, spark.range(450, 500).toDF("id"), cfg).count()
-    Thread.sleep(500) // give the (left-side) release listener time to fire
     assert(cached.storageLevel != StorageLevel.NONE,
       "deltaPairs dropped the caller's own cross-batch cache")
     cached.unpersist(blocking = true)
-    // explicit opt-in still persists the accumulated side (derived-plan callers)
-    val accum2 = spark.range(300).select(pmod($"id", lit(3)).as("block_key"), $"id")
-    Blocking.deltaPairs(accum2, spark.range(250, 300).toDF("id"), cfg,
-      persistAccum = true).count()
-    // (released again by the consuming action — just proves the switch wires)
   }
 }

@@ -6,14 +6,16 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Executed physical plans as they ran, for assertions on what an action
   * actually executed: AQE's final stages, and the plans of the caches the
-  * action read. */
+  * action read; and the persisted RDDs a test leaves behind. */
 object ExecutedPlans extends AdaptiveSparkPlanHelper {
 
   /** Runs `body` and returns the executed plan of every query it ran,
@@ -66,4 +68,31 @@ object ExecutedPlans extends AdaptiveSparkPlanHelper {
   def operators(plan: SparkPlan): Seq[SparkPlan] = walk(plan)._1
 
   def caches(plan: SparkPlan): Seq[InMemoryRelation] = walk(plan)._2
+
+  /** Block-size aggregates in `plan`: final-mode aggregates grouped by
+    * `block_key` alone, one per salted grid that sized its entries. */
+  def sizeAggregates(plan: SparkPlan): Int = operators(plan).count {
+    case a: BaseAggregateExec =>
+      a.groupingExpressions.map(_.name) == Seq("block_key") &&
+        a.aggregateExpressions.exists(_.mode == Final)
+    case _ => false
+  }
+
+  /** Runs `System.gc()` and polls until the RDDs persisted beyond `before`
+    * are gone (a local checkpoint's blocks are freed by the ContextCleaner
+    * once its frame is unreachable); returns how many are still pinned after
+    * 15 s. Drop every frame and captured plan first: a plan holds
+    * the checkpointed RDDs it read. */
+  def awaitUnpinned(spark: SparkSession, before: collection.Set[Int]): Int = {
+    val deadline = System.currentTimeMillis + 15000
+    while (pinnedSince(spark, before) > 0 && System.currentTimeMillis < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    pinnedSince(spark, before)
+  }
+
+  /** RDDs persisted now that were not in `before`. */
+  def pinnedSince(spark: SparkSession, before: collection.Set[Int]): Int =
+    spark.sparkContext.getPersistentRDDs.keys.count(!before.contains(_))
 }

@@ -155,9 +155,7 @@ class PlanSpec extends SparkSpec {
 
   test("near-dup operators: block sizes aggregated once per grid, numbered verify exchange") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     import org.apache.spark.sql.functions.xxhash64
@@ -169,46 +167,43 @@ class PlanSpec extends SparkSpec {
       .union((0 until 200).map(i => (s"t$i", s"$body x${i % 2}")).toDF("url", "text")))
       .select(xxhash64($"url").as("doc_id"), $"text")
     val work = java.nio.file.Files.createTempDirectory("graft-neardup-plan").toString
-    def plan(op: String)(df: => DataFrame) = {
-      val writes = ExecutedPlans.capture(spark)(df.write.parquet(s"$work/$op"))
-        .map(ExecutedPlans.operators)
-        .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
-      assert(writes.size == 1, s"$op: ${writes.size} write plans captured")
-      writes.head
-    }
-    def sizeAggregates(ops: Seq[org.apache.spark.sql.execution.SparkPlan]) = ops.count {
-      case a: BaseAggregateExec =>
-        a.groupingExpressions.map(_.name) == Seq("block_key") &&
-          a.aggregateExpressions.exists(_.mode == Final)
-      case _ => false
-    }
     def verifyCounts(ops: Seq[org.apache.spark.sql.execution.SparkPlan]) = ops.collect {
       case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
         e.outputPartitioning
     }.collect { case HashPartitioning(Seq(a: Attribute), n) if a.name == "id1" => n }
-    val mh = plan("minhash")(graft.operators.Dedup.minhashNearDup(docs, "doc_id", "text", 0.8))
-    // the grid's four legs read ONE sized-entries cache, not one size
-    // aggregate and size join per leg
-    assert(sizeAggregates(mh) == 1, mh.mkString("\n"))
+    // writes the operator's output; returns the size aggregates across every
+    // plan the call ran (the grid inputs' checkpoints included) and the
+    // partition counts of the numbered id1 exchanges — counts only, since a
+    // captured plan holds the checkpointed grid inputs it read
+    def run(op: String)(df: => DataFrame): (Int, Seq[Int]) = {
+      val plans = ExecutedPlans.capture(spark)(df.write.parquet(s"$work/$op"))
+      val ops = plans.map(ExecutedPlans.operators)
+      val writes = ops.count(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+      assert(writes == 1, s"$op: $writes write plans captured")
+      (plans.map(ExecutedPlans.sizeAggregates).sum, ops.flatMap(verifyCounts))
+    }
+    val (mhAggregates, mhVerify) =
+      run("minhash")(graft.operators.Dedup.minhashNearDup(docs, "doc_id", "text", 0.8))
+    // the grid's four legs read ONE materialized sized-entries table, not one
+    // size aggregate and size join per leg
+    assert(mhAggregates == 1, s"minhash: $mhAggregates size aggregates")
     // the candidate exchange feeding the verify joins is numbered (at least
     // one wave): a by-column one is AQE-coalesced to a single verify task
     val cores = spark.sparkContext.defaultParallelism
-    assert(verifyCounts(mh) == Seq(cores), mh.mkString("\n"))
+    assert(mhVerify == Seq(cores), s"minhash verify exchanges: $mhVerify")
     // a session tuned to more shuffle partitions than cores keeps its count
     val parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", (cores * 3).toString)
     try {
-      val tuned = plan("minhash-tuned")(
+      val (_, tuned) = run("minhash-tuned")(
         graft.operators.Dedup.minhashNearDup(docs, "doc_id", "text", 0.8))
-      assert(verifyCounts(tuned) == Seq(cores * 3), tuned.mkString("\n"))
+      assert(tuned == Seq(cores * 3), s"tuned verify exchanges: $tuned")
     } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
-    val sh = plan("simhash")(graft.operators.Dedup.simhashNearDup(docs, "doc_id", "text"))
-    assert(sizeAggregates(sh) == 1, sh.mkString("\n"))
-    // neither operator leaves a cache behind
-    val deadline = System.currentTimeMillis + 15000
-    def leaked = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
-    while (leaked > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
-    assert(leaked == 0, s"$leaked cached RDD(s) still pinned after the writes")
+    val (shAggregates, _) = run("simhash")(graft.operators.Dedup.simhashNearDup(docs, "doc_id", "text"))
+    assert(shAggregates == 1, s"simhash: $shAggregates size aggregates")
+    // neither operator leaves its grid inputs pinned once its result is gone
+    val leaked = ExecutedPlans.awaitUnpinned(spark, beforeIds)
+    assert(leaked == 0, s"$leaked grid input(s) still pinned after the writes")
   }
 
   test("snapshots partition by warc_day: date-filtered reads prune at the directory level") {

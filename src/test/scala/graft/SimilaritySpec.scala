@@ -70,6 +70,38 @@ class SimilaritySpec extends AnyFunSuite {
     assert(a.distinct.length == a.length)
   }
 
+  /** Band keys from a plain MinHash loop over `shingles`, with no seen
+    * table: every shingle, repeated or not, remixes into the minima. */
+  private def refBands(shingles: Seq[Array[Byte]], bands: Int, rows: Int, seed: Long): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.Platform
+    val golden = 0x9E3779B97F4A7C15L
+    val mins = Array.fill(bands * rows)(Long.MaxValue)
+    for (sh <- shingles) {
+      val h0 = XXH64.hashUnsafeBytes(sh, Platform.BYTE_ARRAY_OFFSET, sh.length, seed)
+      for (j <- mins.indices) mins(j) = math.min(mins(j), XXH64.hashLong(h0, seed + golden * (j + 1)))
+    }
+    (0 until bands).map(b =>
+      (0 until rows).foldLeft(seed + b)((acc, r) => XXH64.hashLong(mins(b * rows + r), acc)))
+  }
+
+  test("minhash bands: a full seen table keeps the signature exact") {
+    // more distinct shingles than the kernels' seen table holds (3,072),
+    // each repeated many times, so the table fills and later hits, misses
+    // and never-inserted shingles all occur in one row
+    val r = new scala.util.Random(17)
+    val vocab = randWords(r, 6000)
+    val text = (0 until 30000).map(_ => vocab(r.nextInt(vocab.size))).mkString(" ")
+    val bytes = text.getBytes("UTF-8")
+    val grams = (0 to bytes.length - 3).map(i => bytes.slice(i, i + 3))
+    val tokens = text.split(" ").toSeq.map(_.getBytes("UTF-8"))
+    assert(grams.map(_.toSeq).distinct.size > 3072 && tokens.map(_.toSeq).distinct.size > 3072)
+    assert(grams.size > 4 * 3072 && tokens.size > 4 * 3072)
+    assert(Similarity.minHashBands(utf8(text), 16, 6, 42L).toSeq == refBands(grams, 16, 6, 42L))
+    assert(Similarity.minHashBandsTokens(utf8(text), 16, 6, 42L).toSeq ==
+      refBands(tokens, 16, 6, 42L))
+  }
+
   test("simhash: identical texts equal; near texts close in hamming") {
     val a = Similarity.simHash64(utf8("alpha beta gamma delta epsilon zeta eta theta"), 0L)
     val b = Similarity.simHash64(utf8("alpha beta gamma delta epsilon zeta eta theta"), 0L)
