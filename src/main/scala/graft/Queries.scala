@@ -444,16 +444,14 @@ object Queries {
                  else pmod(col("id.hi"), lit(2)) =!= 0).select("id")
     val (l1, l2) = (chunk(projL, even = true), chunk(projL, even = false))
     val (r1, r2) = (chunk(projR, even = true), chunk(projR, even = false))
-    def matchesOf(pairs: DataFrame) =
-      Scoring.scoreTwoTable(s, pairs, attrsL, attrsR).toDF()
-        .where(col("score") >= Scoring.Weights().threshold)
-        .select("url1", "url2")
+    def matchesOf(accumL: DataFrame, accumR: DataFrame, newL: DataFrame, newR: DataFrame) =
+      graft.streaming.Streams.twoTableDeltaMatches(s, accumL, accumR, newL, newR,
+        attrsL, attrsR, cfg = cfg).select("url1", "url2")
     // batch 1: chunk-1 accumulated tables, everything new; batch 2: full
     // accumulated tables, chunk 2 newly ingested on each side
-    val d1 = matchesOf(Blocking.deltaPairsTwoTable(
-      blocksL.join(l1, Seq("id"), "left_semi"),
-      blocksR.join(r1, Seq("id"), "left_semi"), l1, r1, cfg))
-    val d2 = matchesOf(Blocking.deltaPairsTwoTable(blocksL, blocksR, l2, r2, cfg))
+    val d1 = matchesOf(blocksL.join(l1, Seq("id"), "left_semi"),
+      blocksR.join(r1, Seq("id"), "left_semi"), l1, r1)
+    val d2 = matchesOf(blocksL, blocksR, l2, r2)
     d1.unionByName(d2).dropDuplicates("url1", "url2")
       .groupBy("url1").agg(count(lit(1)).as("n_matches"))
       .groupBy("n_matches").agg(count(lit(1)).as("n_left_pages"))
@@ -522,8 +520,7 @@ object Queries {
         when(if (stripMod0) e === 0 else e =!= 0, noMedia).otherwise(col("html")))
       val work = java.nio.file.Files.createTempDirectory(s"graft-q44-$name").toString
       val store = new graft.lineage.SnapshotStore(s, work, resume = false)
-      store.stage("projected", "q44",
-        countersFromWritten = graft.pipeline.Linkage.mediaCounter) {
+      store.stage("projected", "q44", observed = Seq(graft.pipeline.Linkage.mediaRows)) {
         Scoring.projected(corpus)
       }
       val cov = graft.pipeline.Linkage.mediaCoverageFromManifest(s, work, "q44")

@@ -1,6 +1,6 @@
 package graft.clustering
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stage 3: transitive clustering via the alternating large-star / small-star
@@ -46,42 +46,42 @@ object ConnectedComponents {
     moved.unionByName(self).distinct()
   }
 
-  /** Convergence signature (edge count, order-independent hash) — and, when
-    * the input carries a `changed` column, the merges-applied counter — are
-    * collected as `observe` side effects of the checkpoint materialization:
-    * zero extra jobs per iteration, no driver collect of the edge set
-    * (SURVEY §7.5.5; merges fold VERDICT r1 §perf). */
-  private def checkpointWithSignature(df: DataFrame): (DataFrame, (Long, Long), Long) = {
-    val hasChanged = df.columns.contains("changed")
-    val base = Seq(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(node, root))"), lit(0L)).as("h"))
-    val metrics = base ++
-      (if (hasChanged) Seq(coalesce(sum(col("changed")), lit(0L)).as("m")) else Nil)
-    val observed = df.observe("cc_sig", metrics.head, metrics.tail: _*)
-    val projected = if (hasChanged) observed.select("node", "root") else observed
-    val materialized = projected.localCheckpoint() // action: runs + records metrics
-    val row = projected.queryExecution.observedMetrics("cc_sig")
-    (materialized, (row.getLong(0), row.getLong(1)), if (hasChanged) row.getLong(2) else 0L)
+  /** Materializes one edge table in one job — written to `path` and read
+    * back, else localCheckpointed. Its convergence signature (edge count,
+    * order-independent hash) and, when the input carries a `changed`
+    * column, the merges-applied counter are observed metrics of that job:
+    * no extra job, no driver collect (SURVEY §7.5.5; VERDICT r1 §perf). */
+  private def materialize(df: DataFrame, path: Option[String]): (DataFrame, (Long, Long), Long) = {
+    val merges =
+      if (df.columns.contains("changed")) Seq(coalesce(sum(col("changed")), lit(0L)).as("m"))
+      else Nil
+    val obs = Observation()
+    val observed = df.observe(obs, count(lit(1)).as("n"),
+      coalesce(expr("bit_xor(xxhash64(node, root))"), lit(0L)).as("h") +: merges: _*)
+      .select("node", "root")
+    val materialized = path match {
+      case Some(p) =>
+        observed.write.mode("overwrite").parquet(p)
+        df.sparkSession.read.schema(observed.schema).parquet(p) // known schema: no footer job
+      case None => observed.localCheckpoint()
+    }
+    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    (materialized, (m("n"), m("h")), m.getOrElse("m", 0L))
   }
 
   /**
     * @param edges         (src, dst) above-threshold pairs, any orientation
     * @param nodes         optional universe of nodes (single column "node",
     *                      any orderable type); singletons get root = self
-    * @param checkpointDir if set, each iteration's edge table is written as a
-    *                      Parquet snapshot (north rule: checkpointed
-    *                      per-iteration edge tables)
+    * @param checkpointDir if set, the canonical input edges and each
+    *                      iteration's are written to `edges_iter_N` and read
+    *                      back as the next input (north rule: checkpointed
+    *                      per-iteration edge tables), else localCheckpointed
     * @param trackMerges   count root-pointer rewrites per iteration (lineage
     *                      counter "merges applied"; a left join against the
-    *                      previous — already checkpointed — edge table that
-    *                      rides the SAME checkpoint job via observe: no extra
-    *                      action per iteration)
-    * @param roundsPerMaterialize large/small-star rounds chained per
-    *                      checkpoint/convergence-check (each materialization
-    *                      is one Spark job — a serial-latency floor at small
-    *                      edge counts; 2 halves the job count at the cost of
-    *                      possibly one extra round after convergence)
+    *                      previous — already materialized — edge table that
+    *                      rides the SAME materialization job via observe: no
+    *                      extra action per iteration)
     */
   def run(
       spark: SparkSession,
@@ -89,37 +89,37 @@ object ConnectedComponents {
       nodes: Option[DataFrame] = None,
       maxIter: Int = 30,
       checkpointDir: Option[String] = None,
-      trackMerges: Boolean = true,
-      roundsPerMaterialize: Int = 1): Result = {
-    var (e, sig, _) = checkpointWithSignature(edges
+      trackMerges: Boolean = true): Result = {
+    def iterPath(i: Int) = checkpointDir.map(d => s"$d/edges_iter_$i")
+    var (e, sig, _) = materialize(edges
       .select(greatest(col("src"), col("dst")).as("node"), least(col("src"), col("dst")).as("root"))
       .where(col("node") =!= col("root"))
-      .distinct())
+      .distinct(), iterPath(0))
 
     var iter = 0
     var merges = 0L
     var converged = sig._1 == 0L
     while (!converged && iter < maxIter) {
       iter += 1
-      val stepped = (1 to roundsPerMaterialize)
-        .foldLeft(e)((acc, _) => smallStar(largeStar(acc)))
+      // one star round per materialization: each round consumes its input
+      // 3-4× (symmetrize + min-aggregate + join), so chaining rounds
+      // unmaterialized re-executes the previous round's plan per consumer —
+      // measured SLOWER than one job per round (er 12.8 → 17.3 s at 100k)
+      val stepped = smallStar(largeStar(e))
       // merges applied this round = root pointers created or rewritten =
       // (node, root) rows absent from the previous edge table. The diff
       // joins on BOTH columns — e's rows are distinct, so the left join can
       // never fan out a stepped row (a node legitimately carries several
       // roots mid-convergence; joining on node alone would DUPLICATE edges).
-      // Summed by the checkpoint's observe — no extra job.
+      // Summed by the materialization's observe — no extra job.
       val diffed =
         if (trackMerges)
           stepped.join(e.withColumn("existed", lit(1L)), Seq("node", "root"), "left")
             .withColumn("changed", when(col("existed").isNull, 1L).otherwise(0L))
             .select("node", "root", "changed")
         else stepped
-      val (next, nextSig, m) = checkpointWithSignature(diffed)
+      val (next, nextSig, m) = materialize(diffed, iterPath(iter))
       merges += m
-      checkpointDir.foreach { dir =>
-        next.write.mode("overwrite").parquet(s"$dir/edges_iter_$iter")
-      }
       converged = nextSig == sig
       sig = nextSig
       e = next

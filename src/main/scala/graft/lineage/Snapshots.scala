@@ -2,8 +2,12 @@ package graft.lineage
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-style snapshot + manifest protocol (no Iceberg jar in the offline
   * env — SURVEY §7.1): every stage writes its output as a Parquet snapshot
@@ -14,8 +18,7 @@ import org.apache.spark.sql.functions._
   * (conver_test.py:156,178,211; split_data.py:127-137).
   */
 object Snapshots {
-  case class StageOutcome(df: DataFrame, resumed: Boolean, rows: Long,
-                          counters: Map[String, Long])
+  case class StageOutcome(df: DataFrame, resumed: Boolean, counters: Map[String, Long])
 
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
@@ -79,10 +82,17 @@ class SnapshotStore(spark: SparkSession, root: String, resume: Boolean) {
     readManifestField(manifestPath(stage), "status").contains("complete") &&
       readManifestField(manifestPath(stage), "fingerprint").contains(fingerprint)
 
-  /** Run (or resume) a stage. On compute: writes the Parquet snapshot, then
-    * derives row counts + per-partition lineage counters from the *written*
-    * files (no plan recompute), and marks the manifest complete. On resume:
-    * reads the snapshot back — upstream lineage is fully cut.
+  /** Run (or resume) a stage. On compute: ONE Spark job writes the Parquet
+    * snapshot, with `rows` and the `observed` counters (named, never-null
+    * aggregates) as its observed metrics; only `countersFromWritten`, for
+    * counters that need a shuffle, scans the snapshot again. The partition
+    * list comes from the written files. On resume: reads the snapshot back
+    * with its manifest's counters — upstream lineage is fully cut.
+    *
+    * `riders`: manifest-only stages (`format` none) whose Observation,
+    * applied by `compute`, rides this write (ingest's row count and text
+    * hash ride projected's). Their manifests follow this stage's, which
+    * resumes only when they are complete too.
     *
     * `partitionBy` columns (present in the computed frame) become Hive-style
     * snapshot partitions — a resumed or incremental read with a filter on
@@ -91,56 +101,49 @@ class SnapshotStore(spark: SparkSession, root: String, resume: Boolean) {
       name: String,
       fingerprint: String,
       countersFromWritten: DataFrame => Map[String, Long] = _ => Map.empty,
-      shaCol: Option[String] = None,
-      partitionBy: Seq[String] = Nil)(compute: => DataFrame): StageOutcome = {
-    if (resume && isComplete(name, fingerprint)) {
-      val df = spark.read.parquet(dataPath(name))
-      return StageOutcome(df, resumed = true, rows = -1L, counters = Map.empty)
-    }
-    val writer = compute.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dataPath(name))
-    val written = spark.read.parquet(dataPath(name))
-    val perPart = written.groupBy(spark_partition_id().as("p")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val rows = perPart.map(_._2).sum
-    // per-row invariant spot-check: order-independent hash-sum of sha256(col)
-    val shaSum = shaCol.map { c =>
-      written.agg(coalesce(expr(s"bit_xor(xxhash64(sha2($c, 256)))"), lit(0L))).collect()(0).getLong(0)
-    }
-    val stageCounters = countersFromWritten(written) ++ Map("rows" -> rows) ++
-      shaSum.map(s => "sha_sum" -> s).toMap
-    writeManifest(manifestPath(name),
-      Map("stage" -> name, "fingerprint" -> fingerprint, "status" -> "complete",
-        "format" -> "parquet"),
-      stageCounters, perPart)
-    StageOutcome(written, resumed = false, rows = rows, counters = stageCounters)
+      partitionBy: Seq[String] = Nil,
+      observed: Seq[Column] = Nil,
+      riders: Seq[(String, Observation)] = Nil)(compute: => DataFrame): StageOutcome = {
+    if (resume && (name +: riders.map(_._1)).forall(isComplete(_, fingerprint)))
+      return StageOutcome(spark.read.parquet(dataPath(name)), resumed = true, counters(name))
+    val obs = Observation()
+    val df = compute.observe(obs, count(lit(1)).as("rows"), observed: _*)
+    df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dataPath(name))
+    // known schema, partition columns last as a read finds them: no footer job
+    val (parts, data) = df.schema.partition(f => partitionBy.contains(f.name))
+    val written = spark.read.schema(StructType(data ++ parts)).parquet(dataPath(name))
+    val stageCounters = longs(obs) ++ countersFromWritten(written)
+    def header(stage: String, format: String) = Map("stage" -> stage,
+      "fingerprint" -> fingerprint, "status" -> "complete", "format" -> format)
+    writeManifest(manifestPath(name), header(name, "parquet") +
+      ("partitions_count" -> "rows per write task (part-NNNNN), from the Parquet footers"),
+      stageCounters, writeTaskRows(dataPath(name)))
+    // an Observation completes only on a write that ran: never on a resume
+    riders.foreach { case (r, o) => writeManifest(manifestPath(r), header(r, "none"), longs(o), Nil) }
+    StageOutcome(written, resumed = false, stageCounters)
   }
 
-  /** Record a manifest for a stage that does not materialize data (e.g. the
-    * ingest stage records the input's invariant hash without copying 100 TB). */
-  def recordOnly(name: String, fingerprint: String, df: DataFrame,
-                 shaCol: Option[String] = None): Map[String, Long] = {
-    if (resume && isComplete(name, fingerprint)) return Map.empty
-    val aggs = Seq(count(lit(1)).as("rows")) ++
-      shaCol.map(c => coalesce(expr(s"bit_xor(xxhash64(sha2($c, 256)))"), lit(0L)).as("sha_sum"))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val counters = Map("rows" -> row.getLong(0)) ++
-      shaCol.map(_ => "sha_sum" -> row.getLong(1)).toMap
-    writeManifest(manifestPath(name),
-      Map("stage" -> name, "fingerprint" -> fingerprint, "status" -> "complete",
-        "format" -> "none"),
-      counters, Seq.empty)
-    counters
+  private def longs(obs: Observation) = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+
+  /** Rows per write task, read from the committed files' Parquet footers
+    * (metadata only, no Spark job). A task's files share its partition
+    * index as the `part-NNNNN` prefix, one file per `partitionBy`
+    * directory it wrote to; their rows are summed. */
+  private def writeTaskRows(path: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = new Path(path).getFileSystem(conf).listFiles(new Path(path), true)
+    val PartFile = """part-(\d+)-.*\.parquet""".r
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .flatMap(f => f.getPath.getName match {
+        case PartFile(task) =>
+          val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+          try Some(task.toInt -> footer.getRecordCount) finally footer.close()
+        case _ => None
+      })
+      .toSeq.groupMapReduce(_._1)(_._2)(_ + _).toSeq
   }
 
-  def counter(stage: String, key: String): Option[Long] = {
-    val p = Paths.get(manifestPath(stage))
-    if (!Files.exists(p)) return None
-    val s = Files.readString(p)
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":(-?\\d+)").r
-      .findFirstMatchIn(s).map(_.group(1).toLong)
-  }
+  def counter(stage: String, key: String): Option[Long] = counters(stage).get(key)
 
   /** All counters recorded in a stage manifest (resume-time readback). */
   def counters(stage: String): Map[String, Long] = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -12,7 +12,7 @@ import graft.scoring.Scoring
 
 /** The record-linkage pipeline (north star), declared ONCE as a stage graph
   * over one stage runner:
-  *   ingest(manifest-only) → projected → attrs → blocks   (per side)
+  *   projected (+ ingest, manifest-only) → attrs → blocks   (per side)
   *   → self tail:  pairs (self-join) → scored → clusters (connected components)
   *   → cross tail: pairs (A×B cross-join) → scored → matches
   * One table is one side with unsuffixed stage names; two tables are the
@@ -22,9 +22,10 @@ import graft.scoring.Scoring
   *   - [[run]] (self) and [[runTwoTableStaged]] (cross) materialize every
   *     stage as an Iceberg-style Parquet snapshot + JSON manifest with
   *     lineage counters; a rerun with resume=true picks up after the last
-  *     complete stage. The per-row invariant (byte-identical text per url,
-  *     evidenced by an order-independent hash-sum of sha256(text)) is
-  *     recorded at ingest and re-verifiable at any point.
+  *     complete stage; each stage (and each connected-components iteration)
+  *     is one Parquet write carrying its counters. The per-row invariant
+  *     (byte-identical text per url, evidenced by an order-independent
+  *     hash-sum of sha256(text)) is recorded at ingest and re-verifiable.
   *   - [[runLight]] (self) and [[runTwoTable]] (cross) materialize with
   *     localCheckpoint — bench / ad-hoc use ONLY: it trades fault tolerance
   *     and executor memory for speed (lost executor = recompute from
@@ -133,13 +134,9 @@ object Linkage {
   /** Projected-stage lineage counter: rows with a nonempty pooled media
     * vector. `media_rows / rows` is the EXACT corpus media coverage — the
     * content-based weight-profile signal (Scoring.Weights.forMediaCoverage)
-    * for free at snapshot time, no extra corpus pass. */
-  private[graft] def mediaCounter(written: DataFrame): Map[String, Long] = {
-    val n = written
-      .agg(coalesce(sum(when(size(col("img")) > 0, 1L).otherwise(0L)), lit(0L)))
-      .collect()(0).getLong(0)
-    Map("media_rows" -> n)
-  }
+    * observed on the snapshot write, no extra corpus pass. */
+  private[graft] val mediaRows: Column =
+    coalesce(sum(when(size(col("img")) > 0, 1L).otherwise(0L)), lit(0L)).as("media_rows")
 
   /** Attrs-stage lineage counter: distinct 128-bit ids. Recorded in the
     * manifest at WRITE time so the id-uniqueness guard reads counters on
@@ -192,27 +189,22 @@ object Linkage {
     private def record(name: String, c: Map[String, Long]): Unit =
       counters ++= c.map { case (k, v) => s"$name.$k" -> v }
 
-    /** Ingest: record count + text invariant hash, copy nothing. */
-    def ingest(name: String, fp: String, df: DataFrame): Unit = mat match {
-      case Snapshot(store) =>
-        val fresh = store.recordOnly(name, fp, df, shaCol = Some("text"))
-        record(name, if (fresh.nonEmpty) fresh else store.counters(name))
-      case _: InMemory =>
-    }
-
-    /** `snapshot = false`: staged runs hand the plan to its consumer
+    /** `observed`, `riders`: see [[SnapshotStore.stage]] (staged only);
+      * `snapshot = false`: staged runs hand the plan to its consumer
       * unmaterialized; `checkpoint = false`: in memory the stage stays fused
       * with its consumer. */
     def stage(name: String, fp: String,
               countersFromWritten: DataFrame => Map[String, Long] = _ => Map.empty,
               partitionBy: Seq[String] = Nil,
+              observed: Seq[Column] = Nil,
+              riders: Seq[(String, Observation)] = Nil,
               snapshot: Boolean = true,
               checkpoint: Boolean = true)(build: => DataFrame): DataFrame = mat match {
       case Snapshot(store) if snapshot =>
-        val o = store.stage(name, fp, countersFromWritten, partitionBy = partitionBy)(build)
+        val o = store.stage(name, fp, countersFromWritten, partitionBy, observed, riders)(build)
         if (o.resumed) resumed :+= name
-        // resumed stages report the counters recorded in their manifest
-        record(name, if (o.resumed) store.counters(name) else o.counters)
+        record(name, o.counters)
+        riders.foreach { case (r, _) => record(r, store.counters(r)) }
         o.df
       case InMemory(pairsScored) if checkpoint =>
         val df = build
@@ -238,7 +230,6 @@ object Linkage {
       sides.indices.map(i =>
         runner.stage(kind + sides(i), fpData, counters, partitionBy(i))(build(i)))
 
-    sides.zip(tables).foreach { case (s, t) => runner.ingest("ingest" + s, fpData, t) }
     // one-pass normalized projection (id, url, norm, price): the normText
     // kernel (the most expensive per-byte op) runs ONCE per side; attrs and
     // blocks both read it. Projected + blocks snapshots partition by crawl
@@ -246,7 +237,16 @@ object Linkage {
     // ingest prune by day at the directory level
     val dayPart = (i: Int) =>
       if (tables(i).columns.contains("warc_ts")) Seq("warc_day") else Nil
-    val projected = perSide("projected", mediaCounter, dayPart)(i => Scoring.projected(tables(i)))
+    // ingest copies nothing and makes no pass: its counters (input rows,
+    // text invariant hash) are observed on the input under projected's write
+    val projected = sides.indices.map { i =>
+      val ingest = Observation()
+      runner.stage("projected" + sides(i), fpData, partitionBy = dayPart(i),
+        observed = Seq(mediaRows), riders = Seq("ingest" + sides(i) -> ingest))(Scoring.projected(
+        if (runner.staged) tables(i).observe(ingest, count(lit(1)).as("rows"),
+          coalesce(bit_xor(xxhash64(sha2(col("text"), 256))), lit(0L)).as("sha_sum"))
+        else tables(i)))
+    }
     // per-page scoring attributes; under Idf each side is weighted by ITS
     // OWN document frequencies (reference doc_freqs_1/doc_freqs_2,
     // helpers.py:88-127), aggregated only when the stage recomputes
@@ -283,18 +283,13 @@ object Linkage {
     val above = scored.where(col("score") >= cfg.weights.threshold)
     if (self) {
       // transitive clustering (large-star/small-star on 128-bit ids); staged
-      // runs track merges and checkpoint each iteration under <workDir>/cc
+      // runs track merges and write each iteration's edges under <workDir>/cc
       val edges = runner.stage("edges", fp, snapshot = false)(
         above.select(col("id1").as("src"), col("id2").as("dst")))
       var (ccIters, ccMerges) = (0L, 0L)
       runner.stage("clusters", fp, _ =>
         Map("cc_iterations" -> ccIters, "merges_applied" -> ccMerges), checkpoint = false) {
         val idUrl = attrs.head.select(col("id").as("node"), col("url"))
-        // roundsPerMaterialize stays 1: each star round consumes its input
-        // 3-4× (symmetrize + min-aggregate + join), so chaining rounds
-        // unmaterialized re-executes the previous round's plan per consumer
-        // — measured SLOWER than one checkpoint job per round (er 12.8 →
-        // 17.3 s at 100k)
         val cc = ConnectedComponents.run(spark, edges, nodes = Some(idUrl.select("node")),
           checkpointDir = if (runner.staged) Some(s"${cfg.workDir}/cc") else None,
           trackMerges = runner.staged)

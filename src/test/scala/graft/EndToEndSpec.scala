@@ -129,6 +129,26 @@ class EndToEndSpec extends SparkSpec {
     assert(m.f1 >= 0.99)
   }
 
+  test("resume without the ingest manifest: projected recomputes, ingest counters identical") {
+    result.clusters.count()
+    val dir = Files.createTempDirectory("graft-e2e-noingest").toString
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(workDir), new java.io.File(dir))
+    Files.delete(java.nio.file.Paths.get(s"$dir/ingest/manifest.json"))
+    // a kill between projected's manifest and ingest's leaves exactly this
+    // work dir: the projected stage must not resume over an unrecorded input
+    val resumed = Linkage.run(spark, pages, Linkage.Config(workDir = dir, resume = true))
+    assert(resumed.resumedStages == Seq("attrs", "blocks", "pairs", "scored", "clusters"),
+      s"got ${resumed.resumedStages}")
+    def ingest(c: Map[String, Long]) = c.filter(_._1.startsWith("ingest."))
+    assert(ingest(resumed.counters).keySet == Set("ingest.rows", "ingest.sha_sum"))
+    assert(ingest(resumed.counters) == ingest(result.counters))
+    val (now, before) = (new SnapshotStore(spark, dir, resume = true),
+      new SnapshotStore(spark, workDir, resume = true))
+    for (stage <- Seq("ingest", "projected"))
+      assert(now.counters(stage) == before.counters(stage), stage)
+  }
+
   test("counter-less attrs manifest: the id guard fails, naming the missing counter") {
     result.clusters.count()
     val dir = Files.createTempDirectory("graft-e2e-counterless").toString

@@ -69,6 +69,11 @@ object ExecutedPlans extends AdaptiveSparkPlanHelper {
 
   def caches(plan: SparkPlan): Seq[InMemoryRelation] = walk(plan)._2
 
+  /** The leaf operators of `plan` — its scans: file scans, in-memory RDD
+    * scans (`Scan ExistingRDD`, a local checkpoint), cache scans and the
+    * leaves of every cached plan — found as [[walk]] finds operators. */
+  def leafScans(plan: SparkPlan): Seq[SparkPlan] = operators(plan).filter(allChildren(_).isEmpty)
+
   /** Block-size aggregates in `plan`: final-mode aggregates grouped by
     * `block_key` alone, one per salted grid that sized its entries. */
   def sizeAggregates(plan: SparkPlan): Int = operators(plan).count {

@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lineage.Snapshots
+import graft.lineage.{SnapshotStore, Snapshots}
 
 class SnapshotsSpec extends AnyFunSuite {
 
@@ -41,5 +41,17 @@ class SnapshotsSpec extends AnyFunSuite {
     val leftovers = Files.list(Paths.get(path).getParent).toArray.map(_.toString)
       .filter(_.endsWith(".tmp"))
     assert(leftovers.isEmpty, s"temp files left: ${leftovers.mkString(", ")}")
+  }
+
+  test("counter reads only the counters object, never the partition list") {
+    val root = Files.createTempDirectory("graft-manifest-counter")
+    Snapshots.writeManifest(root.resolve("stage").resolve("manifest.json").toString,
+      Map("stage" -> "stage", "status" -> "complete"), Map("blocks_built" -> 7L),
+      Seq((0, 41L), (1, 42L)))
+    val store = new SnapshotStore(TestSpark.spark, root.toString, resume = true)
+    assert(store.counter("stage", "blocks_built").contains(7L))
+    assert(store.counter("stage", "rows").isEmpty,
+      "a key missing from counters must not be read from the partition list")
+    assert(store.counters("stage") == Map("blocks_built" -> 7L))
   }
 }

@@ -179,12 +179,11 @@ class TwoTableSpec extends SparkSpec {
     val (r1, r2) = (chunk(projR, even = true), chunk(projR, even = false))
     val blocksL1 = blocksL.join(l1, Seq("id"), "left_semi")
     val blocksR1 = blocksR.join(r1, Seq("id"), "left_semi")
-    def matchesOf(pairs: org.apache.spark.sql.DataFrame) =
-      Scoring.scoreTwoTable(spark, pairs, attrsL, attrsR).toDF()
-        .where($"score" >= Scoring.Weights().threshold)
-        .select("url1", "url2")
-    val d1 = matchesOf(Blocking.deltaPairsTwoTable(blocksL1, blocksR1, l1, r1, cfg))
-    val d2 = matchesOf(Blocking.deltaPairsTwoTable(blocksL, blocksR, l2, r2, cfg))
+    def matchesOf(accumL: DataFrame, accumR: DataFrame, newL: DataFrame, newR: DataFrame) =
+      graft.streaming.Streams.twoTableDeltaMatches(spark, accumL, accumR, newL, newR,
+        attrsL, attrsR, cfg = cfg).select("url1", "url2")
+    val d1 = matchesOf(blocksL1, blocksR1, l1, r1)
+    val d2 = matchesOf(blocksL, blocksR, l2, r2)
     val uni = d1.unionByName(d2).dropDuplicates("url1", "url2")
       .orderBy("url1", "url2").collect()
     val oneShot = Linkage.runTwoTable(spark, left, right)
