@@ -1,7 +1,9 @@
 package graft.clustering
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.lineage.Snapshots.StageOutcome
 
 /** Stage 3: transitive clustering via the alternating large-star / small-star
   * connected-components algorithm (Kiveris et al., "Connected Components in
@@ -46,83 +48,86 @@ object ConnectedComponents {
     moved.unionByName(self).distinct()
   }
 
-  /** Materializes one edge table in one job — written to `path` and read
-    * back, else localCheckpointed. Its convergence signature (edge count,
-    * order-independent hash) and, when the input carries a `changed`
-    * column, the merges-applied counter are observed metrics of that job:
-    * no extra job, no driver collect (SURVEY §7.5.5; VERDICT r1 §perf). */
-  private def materialize(df: DataFrame, path: Option[String]): (DataFrame, (Long, Long), Long) = {
-    val merges =
-      if (df.columns.contains("changed")) Seq(coalesce(sum(col("changed")), lit(0L)).as("m"))
-      else Nil
-    val obs = Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(node, root))"), lit(0L)).as("h") +: merges: _*)
-      .select("node", "root")
-    val materialized = path match {
-      case Some(p) =>
-        observed.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.schema(observed.schema).parquet(p) // known schema: no footer job
-      case None => observed.localCheckpoint()
-    }
-    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-    (materialized, (m("n"), m("h")), m.getOrElse("m", 0L))
+  /** Writes the named edge table, with the given counters observed on the
+    * write, or resumes it: [[graft.lineage.SnapshotStore.stage]] bound to
+    * the caller's store and fingerprint. */
+  type Stage = (String, Seq[Column]) => (=> DataFrame) => StageOutcome
+
+  private val rows = count(lit(1)).as("rows")
+  private val edgeHash = coalesce(bit_xor(xxhash64(col("node"), col("root"))), lit(0L)).as("edge_hash")
+  private val mergesApplied = coalesce(sum(col("changed")), lit(0L)).as("merges_applied")
+
+  /** Materializes edge table `i` in one job, with its convergence signature
+    * (`rows`, `edge_hash`: count and order-independent hash) and, from
+    * i = 1 when staged, `merges_applied` as observed metrics of that job:
+    * no extra job, no driver collect (SURVEY §7.5.5; VERDICT r1 §perf).
+    * Staged, it is the snapshot stage `edges_iter_<i>`, which a resume reads
+    * back with its manifest's counters; else a localCheckpoint. */
+  private def materialize(stage: Option[Stage], i: Int, df: => DataFrame)
+      : (DataFrame, Map[String, Long]) = stage match {
+    case Some(s) =>
+      val o = s(s"edges_iter_$i", if (i == 0) Seq(edgeHash) else Seq(edgeHash, mergesApplied))(df)
+      (o.df, o.counters)
+    case None =>
+      val obs = Observation()
+      val chk = df.observe(obs, rows, edgeHash).localCheckpoint()
+      (chk, obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
   }
 
+  private def signature(c: Map[String, Long]) = (c("rows"), c("edge_hash"))
+
   /**
-    * @param edges         (src, dst) above-threshold pairs, any orientation
-    * @param nodes         optional universe of nodes (single column "node",
-    *                      any orderable type); singletons get root = self
-    * @param checkpointDir if set, the canonical input edges and each
-    *                      iteration's are written to `edges_iter_N` and read
-    *                      back as the next input (north rule: checkpointed
-    *                      per-iteration edge tables), else localCheckpointed
-    * @param trackMerges   count root-pointer rewrites per iteration (lineage
-    *                      counter "merges applied"; a left join against the
-    *                      previous — already materialized — edge table that
-    *                      rides the SAME materialization job via observe: no
-    *                      extra action per iteration)
+    * @param edges (src, dst) above-threshold pairs, any orientation
+    * @param nodes optional universe of nodes (single column "node", any
+    *              orderable type); singletons get root = self
+    * @param stage if set, the canonical input edges and each iteration's are
+    *              the snapshot stages `edges_iter_N` (N = 0 is the input;
+    *              north rule: checkpointed per-iteration edge tables), each
+    *              the next iteration's input, so a resume continues after the
+    *              last complete one; and root-pointer rewrites are counted
+    *              (lineage counter `merges_applied`: a left join against the
+    *              previous edge table, summed on the SAME write). Else each
+    *              table is localCheckpointed and merges are not counted.
     */
   def run(
       spark: SparkSession,
       edges: DataFrame,
       nodes: Option[DataFrame] = None,
       maxIter: Int = 30,
-      checkpointDir: Option[String] = None,
-      trackMerges: Boolean = true): Result = {
-    def iterPath(i: Int) = checkpointDir.map(d => s"$d/edges_iter_$i")
-    var (e, sig, _) = materialize(edges
+      stage: Option[Stage] = None): Result = {
+    var (e, c) = materialize(stage, 0, edges
       .select(greatest(col("src"), col("dst")).as("node"), least(col("src"), col("dst")).as("root"))
       .where(col("node") =!= col("root"))
-      .distinct(), iterPath(0))
+      .distinct())
 
     var iter = 0
     var merges = 0L
-    var converged = sig._1 == 0L
+    var converged = c("rows") == 0L
     while (!converged && iter < maxIter) {
       iter += 1
+      // staged tables keep the `changed` column their counter sums
+      val prev = e.select("node", "root")
       // one star round per materialization: each round consumes its input
       // 3-4× (symmetrize + min-aggregate + join), so chaining rounds
       // unmaterialized re-executes the previous round's plan per consumer —
       // measured SLOWER than one job per round (er 12.8 → 17.3 s at 100k)
-      val stepped = smallStar(largeStar(e))
-      // merges applied this round = root pointers created or rewritten =
-      // (node, root) rows absent from the previous edge table. The diff
-      // joins on BOTH columns — e's rows are distinct, so the left join can
-      // never fan out a stepped row (a node legitimately carries several
-      // roots mid-convergence; joining on node alone would DUPLICATE edges).
-      // Summed by the materialization's observe — no extra job.
-      val diffed =
-        if (trackMerges)
-          stepped.join(e.withColumn("existed", lit(1L)), Seq("node", "root"), "left")
-            .withColumn("changed", when(col("existed").isNull, 1L).otherwise(0L))
-            .select("node", "root", "changed")
-        else stepped
-      val (next, nextSig, m) = materialize(diffed, iterPath(iter))
-      merges += m
-      converged = nextSig == sig
-      sig = nextSig
+      val (next, nc) = materialize(stage, iter, {
+        val stepped = smallStar(largeStar(prev))
+        // merges applied this round = root pointers created or rewritten =
+        // (node, root) rows absent from the previous edge table. The diff
+        // joins on BOTH columns — prev's rows are distinct, so the left join
+        // can never fan out a stepped row (a node legitimately carries
+        // several roots mid-convergence; joining on node alone would
+        // DUPLICATE edges).
+        if (stage.isEmpty) stepped
+        else stepped.join(prev.withColumn("existed", lit(1L)), Seq("node", "root"), "left")
+          .withColumn("changed", when(col("existed").isNull, 1L).otherwise(0L))
+          .select("node", "root", "changed")
+      })
+      merges += nc.getOrElse("merges_applied", 0L)
+      converged = signature(nc) == signature(c)
       e = next
+      c = nc
     }
 
     val assign = e.select(col("node"), col("root"))

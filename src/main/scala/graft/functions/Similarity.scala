@@ -397,48 +397,26 @@ object Similarity {
     if (occupancy < SeenMax) { seen(slot) = h0; 1 } else 0
   }
 
-  /** One-pass MinHash-LSH band keys over character (byte) 3-gram shingles.
-    *
-    * Computes bands*rows min-hashes in a single scan of the UTF8 bytes (one
-    * base xxhash64 per shingle, then k cheap hashLong remixes) and folds each
-    * band's `rows` minima into one 64-bit band key (band index mixed in so
-    * keys never collide across bands). O(len * bands * rows), zero
-    * intermediate shingle materialization — this is the scale path for
-    * blocking at 10^12 documents.
-    */
-  def minHashBands(s: UTF8String, bands: Int, rows: Int, seed: Long): Array[Long] = {
-    val k = bands * rows
-    val mins = new Array[Long](k)
+  /** Per-row minima of the k = bands * rows min-hashes, before any shingle. */
+  private def newMins(bands: Int, rows: Int): Array[Long] = {
+    val mins = new Array[Long](bands * rows)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    val n = s.numBytes()
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    if (n < 3) {
-      // degenerate short text: hash the whole string once
-      val h0 = XXH64.hashUnsafeBytes(base, off, n, seed)
-      var j = 0
-      while (j < k) { mins(j) = XXH64.hashLong(h0, seed + GOLDEN * (j + 1)); j += 1 }
-    } else {
-      val seen = seenBuf.get()
-      java.util.Arrays.fill(seen, 0L)
-      var occ = 0
-      var i = 0
-      val last = n - 3
-      while (i <= last) {
-        val h0 = XXH64.hashUnsafeBytes(base, off + i, 3, seed)
-        val probe = seenProbe(seen, occ, h0)
-        if (probe != SeenHit) {
-          occ += probe
-          var j = 0
-          while (j < k) {
-            val h = XXH64.hashLong(h0, seed + GOLDEN * (j + 1))
-            if (h < mins(j)) mins(j) = h
-            j += 1
-          }
-        }
-        i += 1
-      }
+    mins
+  }
+
+  /** Folds shingle hash h0's k cheap hashLong remixes into `mins`. */
+  private def remix(mins: Array[Long], h0: Long, seed: Long): Unit = {
+    var j = 0
+    while (j < mins.length) {
+      val h = XXH64.hashLong(h0, seed + GOLDEN * (j + 1))
+      if (h < mins(j)) mins(j) = h
+      j += 1
     }
+  }
+
+  /** Folds each band's `rows` minima into one 64-bit band key (band index
+    * mixed in so keys never collide across bands). */
+  private def bandKeys(mins: Array[Long], bands: Int, rows: Int, seed: Long): Array[Long] = {
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -449,6 +427,39 @@ object Similarity {
       b += 1
     }
     out
+  }
+
+  /** One-pass MinHash-LSH band keys over character (byte) 3-gram shingles.
+    *
+    * Computes bands*rows min-hashes in a single scan of the UTF8 bytes (one
+    * base xxhash64 per shingle, then k cheap hashLong remixes) and folds each
+    * band's `rows` minima into one 64-bit band key (band index mixed in so
+    * keys never collide across bands). O(len * bands * rows), zero
+    * intermediate shingle materialization — this is the scale path for
+    * blocking at 10^12 documents.
+    */
+  def minHashBands(s: UTF8String, bands: Int, rows: Int, seed: Long): Array[Long] = {
+    val mins = newMins(bands, rows)
+    val n = s.numBytes()
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    if (n < 3) {
+      // degenerate short text: hash the whole string once
+      remix(mins, XXH64.hashUnsafeBytes(base, off, n, seed), seed)
+    } else {
+      val seen = seenBuf.get()
+      java.util.Arrays.fill(seen, 0L)
+      var occ = 0
+      var i = 0
+      val last = n - 3
+      while (i <= last) {
+        val h0 = XXH64.hashUnsafeBytes(base, off + i, 3, seed)
+        val probe = seenProbe(seen, occ, h0)
+        if (probe != SeenHit) { occ += probe; remix(mins, h0, seed) }
+        i += 1
+      }
+    }
+    bandKeys(mins, bands, rows, seed)
   }
 
   def minHashBandsArray(s: UTF8String, bands: Int, rows: Int, seed: Long): ArrayData =
@@ -463,9 +474,7 @@ object Similarity {
     * Zero tokens degrades to a seed constant: all token-less texts share the
     * signature, matching their all-equal distinct-token sets. */
   def minHashBandsTokens(s: UTF8String, bands: Int, rows: Int, seed: Long): Array[Long] = {
-    val k = bands * rows
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
+    val mins = newMins(bands, rows)
     val n = s.numBytes()
     val base = s.getBaseObject
     val off = s.getBaseOffset
@@ -476,40 +485,19 @@ object Similarity {
     var i = 0
     var any = false
     while (i <= n) {
-      val atEnd = i == n
-      if (atEnd || Platform.getByte(base, off + i) == ' '.toByte) {
+      if (i == n || Platform.getByte(base, off + i) == ' '.toByte) {
         if (i > start) {
           any = true
           val h0 = XXH64.hashUnsafeBytes(base, off + start, i - start, seed)
           val probe = seenProbe(seen, occ, h0)
-          if (probe != SeenHit) {
-            occ += probe
-            var j = 0
-            while (j < k) {
-              val h = XXH64.hashLong(h0, seed + GOLDEN * (j + 1))
-              if (h < mins(j)) mins(j) = h
-              j += 1
-            }
-          }
+          if (probe != SeenHit) { occ += probe; remix(mins, h0, seed) }
         }
         start = i + 1
       }
       i += 1
     }
-    if (!any) {
-      var j = 0
-      while (j < k) { mins(j) = XXH64.hashLong(seed, seed + GOLDEN * (j + 1)); j += 1 }
-    }
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var acc = seed + b
-      var r = 0
-      while (r < rows) { acc = XXH64.hashLong(mins(b * rows + r), acc); r += 1 }
-      out(b) = acc
-      b += 1
-    }
-    out
+    if (!any) remix(mins, seed, seed)
+    bandKeys(mins, bands, rows, seed)
   }
 
   def minHashBandsTokensArray(s: UTF8String, bands: Int, rows: Int, seed: Long): ArrayData =

@@ -91,9 +91,6 @@ object Normalize {
     when(cleaned.rlike("^[0-9]+(\\.[0-9]+)?$"), 0).otherwise(1)
   }
 
-  /** Per-row invariant: sha256 hex of the raw text. */
-  def textSha(c: Column): Column = sha2(c, 256)
-
   /** Normalized URL domain (north-star composite blocking key component). */
   def domain(url: Column): Column = lower(parse_url(url, lit("HOST")))
 }

@@ -20,14 +20,6 @@ object Multimodal {
 
   private val DataUriRegex = "data:image/[a-zA-Z]+;base64,([A-Za-z0-9+/=]+)"
 
-  /** First base64 data-URI image payload embedded in an html byte column
-    * (the web-native media carrier) as decoded bytes; empty binary when the
-    * page embeds no image. Pure codegen expression chain — no UDF.
-    * Single-image convenience — the scorer consumes [[imageVecFromHtml]],
-    * which pools the page's full image SET. */
-  def dataUriPayload(html: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    unbase64(regexp_extract(decode(html, "UTF-8"), DataUriRegex, 1))
-
   /** ALL embedded data-URI image payloads of a page, each featurized to a
     * `dim`-float pooled vector (empty array when the page embeds none).
     * Degenerate payloads that decode to zero bytes (e.g. a bare padding

@@ -21,9 +21,11 @@ import graft.scoring.Scoring
   * The four entry points are wrappers that pick a materializer and a tail:
   *   - [[run]] (self) and [[runTwoTableStaged]] (cross) materialize every
   *     stage as an Iceberg-style Parquet snapshot + JSON manifest with
-  *     lineage counters; a rerun with resume=true picks up after the last
-  *     complete stage; each stage (and each connected-components iteration)
-  *     is one Parquet write carrying its counters. The per-row invariant
+  *     lineage counters, each one Parquet write carrying its counters. Each
+  *     connected-components iteration is such a stage too, nested under
+  *     `cc/` and keyed by the clusters fingerprint; a rerun with resume=true
+  *     picks up after the last complete stage, and inside clustering after
+  *     the last complete iteration. The per-row invariant
   *     (byte-identical text per url, evidenced by an order-independent
   *     hash-sum of sha256(text)) is recorded at ingest and re-verifiable.
   *   - [[runLight]] (self) and [[runTwoTable]] (cross) materialize with
@@ -33,7 +35,7 @@ import graft.scoring.Scoring
   *     job runs, the pair grid stays fused with scoring, the checkpoint of
   *     the above-threshold edges or matches carries the pairs_scored observe
   *     metric, and connected components runs without merge tracking or
-  *     Parquet checkpoints.
+  *     snapshots.
   *
   * Self-linkage stays a self-join (id1 < id2) instead of the cross-linkage
   * of a table with itself: the salted cross-join would emit every pair in
@@ -184,7 +186,8 @@ object Linkage {
   private final class Runner(mat: Materializer) {
     var counters = Map.empty[String, Long]
     var resumed = Vector.empty[String]
-    val staged: Boolean = mat.isInstanceOf[Snapshot]
+    val store: Option[SnapshotStore] = PartialFunction.condOpt(mat) { case Snapshot(s) => s }
+    val staged: Boolean = store.isDefined
 
     private def record(name: String, c: Map[String, Long]): Unit =
       counters ++= c.map { case (k, v) => s"$name.$k" -> v }
@@ -283,7 +286,9 @@ object Linkage {
     val above = scored.where(col("score") >= cfg.weights.threshold)
     if (self) {
       // transitive clustering (large-star/small-star on 128-bit ids); staged
-      // runs track merges and write each iteration's edges under <workDir>/cc
+      // runs track merges and snapshot each iteration's edges under
+      // <workDir>/cc, keyed by the clusters fingerprint (their counters and
+      // resumes stay in their own manifests, out of the run's)
       val edges = runner.stage("edges", fp, snapshot = false)(
         above.select(col("id1").as("src"), col("id2").as("dst")))
       var (ccIters, ccMerges) = (0L, 0L)
@@ -291,8 +296,8 @@ object Linkage {
         Map("cc_iterations" -> ccIters, "merges_applied" -> ccMerges), checkpoint = false) {
         val idUrl = attrs.head.select(col("id").as("node"), col("url"))
         val cc = ConnectedComponents.run(spark, edges, nodes = Some(idUrl.select("node")),
-          checkpointDir = if (runner.staged) Some(s"${cfg.workDir}/cc") else None,
-          trackMerges = runner.staged)
+          stage = runner.store.map[ConnectedComponents.Stage](store =>
+            (name, observed) => df => store.stage(s"cc/$name", fp, observed = observed)(df)))
         ccIters = cc.iterations.toLong
         ccMerges = cc.mergesApplied
         toUrlClusters(cc.assignments, idUrl)

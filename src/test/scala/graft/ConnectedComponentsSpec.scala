@@ -1,15 +1,24 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.clustering.ConnectedComponents
+import graft.lineage.SnapshotStore
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Staged iterations: snapshot stages of a fresh store in a temp dir. */
+  private def staged(): Option[ConnectedComponents.Stage] = {
+    val store = new SnapshotStore(spark, Files.createTempDirectory("graft-cc").toString, resume = false)
+    Some((name, observed) => df => store.stage(name, "fp", observed = observed)(df))
+  }
 
   private def cc(edges: Seq[(String, String)], nodes: Option[Seq[String]] = None)
       : Map[String, String] = {
     val e = edges.toDF("src", "dst")
     val n = nodes.map(_.toDF("node"))
-    ConnectedComponents.run(spark, e, n, trackMerges = false)
+    ConnectedComponents.run(spark, e, n)
       .assignments.as[(String, String)].collect().toMap
   }
 
@@ -82,7 +91,7 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("assignments hold each node EXACTLY once (no diff-join fan-out)") {
     // regression: a node carries several roots mid-convergence; the
-    // trackMerges diff must join on (node, root), never on node alone —
+    // merge-tracking diff must join on (node, root), never on node alone —
     // joining on node alone silently duplicated edge rows (caught by the
     // CLI eval pair counts, not by set-compare tests)
     val r = new scala.util.Random(11)
@@ -90,11 +99,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = (0 until 150).map { _ =>
       (nodes(r.nextInt(nodes.size)), nodes(r.nextInt(nodes.size)))
     }.filter(e => e._1 != e._2).toDF("src", "dst")
-    for (track <- Seq(true, false)) {
+    for (stage <- Seq(staged(), None)) {
       val res = ConnectedComponents.run(spark, edges,
-        nodes = Some(nodes.toDF("node")), trackMerges = track)
+        nodes = Some(nodes.toDF("node")), stage = stage)
       val dup = res.assignments.groupBy("node").count().where($"count" > 1)
-      assert(dup.count() == 0, s"trackMerges=$track duplicated assignments")
+      assert(dup.count() == 0, s"staged=${stage.isDefined} duplicated assignments")
       assert(res.assignments.count() == nodes.size.toLong)
     }
   }
@@ -102,7 +111,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("iteration count is logarithmic-ish and merges tracked") {
     val n = 128
     val edges = (0 until n - 1).map(i => (f"v$i%03d", f"v${i + 1}%03d")).toDF("src", "dst")
-    val res = ConnectedComponents.run(spark, edges, trackMerges = true)
+    val res = ConnectedComponents.run(spark, edges, stage = staged())
     assert(res.iterations <= 12, s"too many iterations: ${res.iterations}")
     assert(res.mergesApplied > 0)
   }

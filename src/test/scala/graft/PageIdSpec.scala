@@ -74,7 +74,7 @@ class PageIdSpec extends SparkSpec {
       .select(col("id1").as("src"), col("id2").as("dst"))
     val idUrl = attrs.toDF().select(col("id").as("node"), col("url"))
     val cc = ConnectedComponents.run(spark, edges,
-      nodes = Some(idUrl.select("node")), trackMerges = false)
+      nodes = Some(idUrl.select("node")))
     val clustered = cc.assignments.join(idUrl, "node")
       .join(pt.select($"url", $"entity_id"), "url").cache()
     // clusters ≡ planted entities exactly: no collision-induced merge, no split

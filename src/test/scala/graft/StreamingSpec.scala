@@ -194,7 +194,7 @@ class StreamingSpec extends SparkSpec {
       .unionByName(edgesOf(pairs2, attrsAll).localCheckpoint())
     val idUrl = attrsAll.toDF().select($"id".as("node"), $"url")
     val cc = graft.clustering.ConnectedComponents.run(spark, allEdges.localCheckpoint(),
-      nodes = Some(idUrl.select("node")), trackMerges = false)
+      nodes = Some(idUrl.select("node")))
     val incClusters = cc.assignments.join(idUrl, "node")
       .groupBy("root").agg(min("url").as("cluster_id"), collect_set("url").as("members"))
       .select(explode($"members").as("url"), $"cluster_id")
