@@ -116,7 +116,7 @@ class SnapshotStore(spark: SparkSession, root: String, resume: Boolean) {
     def header(stage: String, format: String) = Map("stage" -> stage,
       "fingerprint" -> fingerprint, "status" -> "complete", "format" -> format)
     writeManifest(manifestPath(name), header(name, "parquet") +
-      ("partitions_count" -> "rows per write task (part-NNNNN), from the Parquet footers"),
+      ("partitions_count" -> "rows per write task, largest first, from the Parquet footers"),
       stageCounters, writeTaskRows(dataPath(name)))
     // an Observation completes only on a write that ran: never on a resume
     riders.foreach { case (r, o) => writeManifest(manifestPath(r), header(r, "none"), longs(o), Nil) }
@@ -126,9 +126,12 @@ class SnapshotStore(spark: SparkSession, root: String, resume: Boolean) {
   private def longs(obs: Observation) = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
 
   /** Rows per write task, read from the committed files' Parquet footers
-    * (metadata only, no Spark job). A task's files share its partition
-    * index as the `part-NNNNN` prefix, one file per `partitionBy`
-    * directory it wrote to; their rows are summed. */
+    * (metadata only, no Spark job), numbered largest first. A task's files
+    * share its partition index as the `part-NNNNN` prefix, one file per
+    * `partitionBy` directory it wrote to; their rows are summed. Which task
+    * index wrote which rows is not kept: a write that reads files without a
+    * shuffle hands equal-size files to its tasks in directory listing
+    * order, so two runs can swap two tasks' counts. */
   private def writeTaskRows(path: String): Seq[(Int, Long)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = new Path(path).getFileSystem(conf).listFiles(new Path(path), true)
@@ -140,7 +143,8 @@ class SnapshotStore(spark: SparkSession, root: String, resume: Boolean) {
           try Some(task.toInt -> footer.getRecordCount) finally footer.close()
         case _ => None
       })
-      .toSeq.groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .toSeq.groupMapReduce(_._1)(_._2)(_ + _).values.toSeq
+      .sorted(Ordering[Long].reverse).zipWithIndex.map(_.swap)
   }
 
   def counter(stage: String, key: String): Option[Long] = counters(stage).get(key)

@@ -21,11 +21,13 @@ import graft.scoring.Scoring
   * The four entry points are wrappers that pick a materializer and a tail:
   *   - [[run]] (self) and [[runTwoTableStaged]] (cross) materialize every
   *     stage as an Iceberg-style Parquet snapshot + JSON manifest with
-  *     lineage counters, each one Parquet write carrying its counters. Each
-  *     connected-components iteration is such a stage too, nested under
-  *     `cc/` and keyed by the clusters fingerprint; a rerun with resume=true
-  *     picks up after the last complete stage, and inside clustering after
-  *     the last complete iteration. The per-row invariant
+  *     lineage counters, each one Parquet write carrying its counters. A
+  *     rerun with resume=true picks up after the last complete stage.
+  *     Connected components finishes in the driver once its edge table fits
+  *     [[ConnectedComponents.LocalFinishRows]]; the distributed rounds a
+  *     larger graph runs are stages too, nested under `cc/` and keyed by the
+  *     clusters fingerprint, and a resume continues after the last complete
+  *     round. The per-row invariant
   *     (byte-identical text per url, evidenced by an order-independent
   *     hash-sum of sha256(text)) is recorded at ingest and re-verifiable.
   *   - [[runLight]] (self) and [[runTwoTable]] (cross) materialize with
@@ -34,8 +36,7 @@ import graft.scoring.Scoring
   *     scratch, working set pinned in block storage). In memory no counter
   *     job runs, the pair grid stays fused with scoring, the checkpoint of
   *     the above-threshold edges or matches carries the pairs_scored observe
-  *     metric, and connected components runs without merge tracking or
-  *     snapshots.
+  *     metric, and connected components rounds are localCheckpoints.
   *
   * Self-linkage stays a self-join (id1 < id2) instead of the cross-linkage
   * of a table with itself: the salted cross-join would emit every pair in
@@ -285,10 +286,11 @@ object Linkage {
     }
     val above = scored.where(col("score") >= cfg.weights.threshold)
     if (self) {
-      // transitive clustering (large-star/small-star on 128-bit ids); staged
-      // runs track merges and snapshot each iteration's edges under
-      // <workDir>/cc, keyed by the clusters fingerprint (their counters and
-      // resumes stay in their own manifests, out of the run's)
+      // transitive clustering on 128-bit ids: an edge table within
+      // LocalFinishRows is finished in the driver and writes no stage; staged
+      // runs snapshot each distributed round's edges under <workDir>/cc,
+      // keyed by the clusters fingerprint (their counters and resumes stay in
+      // their own manifests, out of the run's)
       val edges = runner.stage("edges", fp, snapshot = false)(
         above.select(col("id1").as("src"), col("id2").as("dst")))
       var (ccIters, ccMerges) = (0L, 0L)

@@ -16,7 +16,7 @@ class EndToEndSpec extends SparkSpec {
   import spark.implicits._
 
   private val n = 10000L
-  private lazy val workDir = Files.createTempDirectory("graft-e2e").toString
+  private lazy val workDir = tempDir("e2e").toString
   private lazy val pt = Fixture.pagesWithTruth(spark, n).cache()
   private lazy val pages = pt.drop("entity_id").cache()
   private lazy val labeled = Fixture.labeledPairs(spark, pt).cache()
@@ -103,7 +103,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("id-uniqueness guard fires on duplicated input urls (from stage counters)") {
-    val dir = Files.createTempDirectory("graft-e2e-dup").toString
+    val dir = tempDir("e2e-dup").toString
     val small = pages.limit(200).cache()
     small.count() // pin the limit's choice — the union must truly duplicate
     val dup = small.unionAll(small)
@@ -114,7 +114,7 @@ class EndToEndSpec extends SparkSpec {
   }
 
   test("kill/resume: only missing stages recompute after partial run") {
-    val dir2 = Files.createTempDirectory("graft-e2e-partial").toString
+    val dir2 = tempDir("e2e-partial").toString
     val cfg = Linkage.Config(workDir = dir2)
     // simulate a killed run: copy completed early stages only
     val full = new java.io.File(workDir)
@@ -131,7 +131,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("resume without the ingest manifest: projected recomputes, ingest counters identical") {
     result.clusters.count()
-    val dir = Files.createTempDirectory("graft-e2e-noingest").toString
+    val dir = tempDir("e2e-noingest").toString
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(workDir), new java.io.File(dir))
     Files.delete(java.nio.file.Paths.get(s"$dir/ingest/manifest.json"))
@@ -151,7 +151,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("counter-less attrs manifest: the id guard fails, naming the missing counter") {
     result.clusters.count()
-    val dir = Files.createTempDirectory("graft-e2e-counterless").toString
+    val dir = tempDir("e2e-counterless").toString
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(workDir), new java.io.File(dir))
     val store = new SnapshotStore(spark, dir, resume = true)
@@ -178,7 +178,7 @@ class EndToEndSpec extends SparkSpec {
     val attrsPath = s"$dir/attrs/data.parquet"
     val attrsDf = spark.read.parquet(attrsPath)
     val doctoredRows = attrsDf.unionByName(attrsDf.limit(1)).collect()
-    val tmpOut = Files.createTempDirectory("graft-e2e-doctor").toString
+    val tmpOut = tempDir("e2e-doctor").toString
     spark.createDataFrame(
         spark.sparkContext.parallelize(doctoredRows.toIndexedSeq), attrsDf.schema)
       .write.mode("overwrite").parquet(tmpOut)
@@ -197,7 +197,7 @@ class EndToEndSpec extends SparkSpec {
     // pass instead of a full recompute. (Copied workdir: the new scored/
     // clusters snapshots must not clobber the sibling tests' manifests.)
     result.clusters.count()
-    val dir3 = Files.createTempDirectory("graft-e2e-rethresh").toString
+    val dir3 = tempDir("e2e-rethresh").toString
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(workDir), new java.io.File(dir3))
     val strict = Linkage.run(spark, pages, Linkage.Config(workDir = dir3,

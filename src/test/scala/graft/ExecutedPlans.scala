@@ -5,12 +5,15 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.Final
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Executed physical plans as they ran, for assertions on what an action
@@ -73,6 +76,19 @@ object ExecutedPlans extends AdaptiveSparkPlanHelper {
     * scans (`Scan ExistingRDD`, a local checkpoint), cache scans and the
     * leaves of every cached plan — found as [[walk]] finds operators. */
   def leafScans(plan: SparkPlan): Seq[SparkPlan] = operators(plan).filter(allChildren(_).isEmpty)
+
+  private def local(p: Path): String = p.toUri.getPath.stripSuffix("/")
+
+  /** The directory `plan` writes files to, if it is a file write. */
+  def written(plan: SparkPlan): Option[String] = operators(plan).collectFirst {
+    case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) => local(w.outputPath)
+  }
+
+  /** The root directories of the files `plan` scans. */
+  def scanned(plan: SparkPlan): Seq[String] = leafScans(plan).flatMap {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.map(local)
+    case _ => Nil
+  }
 
   /** Block-size aggregates in `plan`: final-mode aggregates grouped by
     * `block_key` alone, one per salted grid that sized its entries. */

@@ -166,7 +166,7 @@ class PlanSpec extends SparkSpec {
     val docs = (graft.fixtures.Fixture.pages(spark, 200).toDF().select($"url", $"text")
       .union((0 until 200).map(i => (s"t$i", s"$body x${i % 2}")).toDF("url", "text")))
       .select(xxhash64($"url").as("doc_id"), $"text")
-    val work = java.nio.file.Files.createTempDirectory("graft-neardup-plan").toString
+    val work = tempDir("neardup-plan").toString
     def verifyCounts(ops: Seq[org.apache.spark.sql.execution.SparkPlan]) = ops.collect {
       case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
         e.outputPartitioning
@@ -208,7 +208,7 @@ class PlanSpec extends SparkSpec {
 
   test("snapshots partition by warc_day: date-filtered reads prune at the directory level") {
     import org.apache.spark.sql.functions._
-    val workDir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val workDir = tempDir("part").toString
     val store = new graft.lineage.SnapshotStore(spark, workDir, resume = false)
     val pages = graft.fixtures.Fixture.pages(spark, 100).toDF()
     store.stage("projected", "fp-test", partitionBy = Seq("warc_day")) {

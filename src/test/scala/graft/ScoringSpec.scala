@@ -274,7 +274,7 @@ class ScoringSpec extends SparkSpec {
   }
 
   test("EmbeddingModel parquet round-trip: load ≡ fixture (same fingerprint)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val dir = tempDir("emb").toString
     Fixture.embeddingsTable(spark).write.mode("overwrite").parquet(s"$dir/emb.parquet")
     val loaded = graft.scoring.EmbeddingModel.fromParquet(spark, s"$dir/emb.parquet")
     assert(loaded.dim == Fixture.Dim)
@@ -312,7 +312,7 @@ class ScoringSpec extends SparkSpec {
 
   test("artifact fingerprint rides the parquet (writeParquet): cached == computed; doctored artifact fails verify") {
     val model = graft.scoring.EmbeddingModel.fixture
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb-fp").toString
+    val dir = tempDir("emb-fp").toString
     graft.scoring.EmbeddingModel.writeParquet(spark, model, dir)
     val loaded = graft.scoring.EmbeddingModel.fromParquet(spark, dir)
     // the cached fingerprint is present, honest, and identical to the
@@ -354,7 +354,7 @@ class ScoringSpec extends SparkSpec {
       Array(5f, 6f, 7f, 8f),    // id 3 (vocab-mapped)
       junk.clone())             // id 4: trailing, past max vocab id
     val model = graft.scoring.EmbeddingModel(Map("alpha" -> 1, "beta" -> 3), matrix)
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb-canon").toString
+    val dir = tempDir("emb-canon").toString
     graft.scoring.EmbeddingModel.writeParquet(spark, model, dir)
     // verify=true passes: the cached hash matches what fromTable reconstructs
     val loaded = graft.scoring.EmbeddingModel.fromParquet(spark, dir, verify = true)

@@ -3,14 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.lineage.{SnapshotStore, Snapshots}
 
-class SnapshotsSpec extends AnyFunSuite {
+class SnapshotsSpec extends SparkSpec {
 
   test("concurrent manifest writers: one writer's content survives, no temp file left") {
-    val dir = Files.createTempDirectory("graft-manifest-race")
+    val dir = tempDir("manifest-race")
     val path = dir.resolve("stage").resolve("manifest.json").toString
     val writers = 8
     def fields(w: Int) = Map("stage" -> s"writer$w", "fingerprint" -> s"fp$w", "status" -> "complete")
@@ -34,7 +32,7 @@ class SnapshotsSpec extends AnyFunSuite {
     val stage = Snapshots.readManifestField(path, "stage")
     val w = stage.map(_.stripPrefix("writer").toInt)
     assert(w.exists(i => i >= 0 && i < writers), s"unparseable manifest stage $stage")
-    val expected = Files.createTempDirectory("graft-manifest-one").resolve("manifest.json").toString
+    val expected = tempDir("manifest-one").resolve("manifest.json").toString
     Snapshots.writeManifest(expected, fields(w.get), counters(w.get), partitions(w.get))
     assert(Files.readString(Paths.get(path)) == Files.readString(Paths.get(expected)),
       "the manifest mixes several writers' content")
@@ -44,11 +42,11 @@ class SnapshotsSpec extends AnyFunSuite {
   }
 
   test("counter reads only the counters object, never the partition list") {
-    val root = Files.createTempDirectory("graft-manifest-counter")
+    val root = tempDir("manifest-counter")
     Snapshots.writeManifest(root.resolve("stage").resolve("manifest.json").toString,
       Map("stage" -> "stage", "status" -> "complete"), Map("blocks_built" -> 7L),
       Seq((0, 41L), (1, 42L)))
-    val store = new SnapshotStore(TestSpark.spark, root.toString, resume = true)
+    val store = new SnapshotStore(spark, root.toString, resume = true)
     assert(store.counter("stage", "blocks_built").contains(7L))
     assert(store.counter("stage", "rows").isEmpty,
       "a key missing from counters must not be read from the partition list")

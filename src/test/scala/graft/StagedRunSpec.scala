@@ -4,27 +4,29 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.expressions.SparkPartitionID
-import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.{CollectLimitExec, RDDScanExec}
 
+import graft.clustering.ConnectedComponents
 import graft.fixtures.Fixture
 import graft.lineage.SnapshotStore
 import graft.pipeline.Linkage
 
-/** A staged linkage run materializes each stage, and each connected
-  * components iteration, with one Parquet write: counters that aggregate
-  * the written rows ride that write, and the manifest's partition list
-  * comes from the committed files. A resume continues after the last
-  * complete stage or iteration. */
+/** A staged linkage run materializes each stage with one Parquet write:
+  * counters that aggregate the written rows ride that write, and the
+  * manifest's partition list comes from the committed files. Connected
+  * components finishes in the driver at this size and writes no `cc/`
+  * stage. A resume continues after the last complete stage. */
 class StagedRunSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val pages = Fixture.pages(spark, 2000).toDF()
 
-  private def tmp(tag: String) = Files.createTempDirectory(s"graft-staged-$tag").toString
+  private def tmp(tag: String) = tempDir(s"staged-$tag").toString
+
+  /** The stages in the order a staged run completes them (ingest's manifest
+    * follows projected's). */
+  private val completionOrder = Seq("projected", "attrs", "blocks", "pairs", "scored", "clusters")
 
   /** The first staged run: its work dir, result and every execution, in order. */
   private lazy val (firstDir, firstRun, firstPlans) = {
@@ -34,33 +36,18 @@ class StagedRunSpec extends SparkSpec {
     (dir, r, plans)
   }
 
-  /** The connected-components iteration stages of a work dir, in order. */
-  private def ccIterations(dir: String): Seq[String] =
-    new java.io.File(s"$dir/cc").list().toSeq.sortBy(_.stripPrefix("edges_iter_").toInt)
-      .map("cc/" + _)
+  import ExecutedPlans.{scanned, written}
 
-  private def local(p: Path): String = p.toUri.getPath.stripSuffix("/")
-
-  private def written(plan: SparkPlan): Option[String] =
-    ExecutedPlans.operators(plan).collectFirst {
-      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) => local(w.outputPath)
-    }
-
-  private def scanned(plan: SparkPlan): Seq[String] =
-    ExecutedPlans.leafScans(plan).flatMap {
-      case s: FileSourceScanExec => s.relation.location.rootPaths.map(local)
-      case _ => Nil
-    }
-
-  private def manifests(dir: String): Map[String, String] = {
-    val root = Paths.get(dir)
-    Files.walk(root).iterator.asScala.filter(_.getFileName.toString == "manifest.json")
-      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
-  }
+  /** True if the run wrote no connected-components round stage. */
+  private def noRoundStages(dir: String): Boolean = !Files.exists(Paths.get(s"$dir/cc"))
 
   test("staged run: no partition-id recount, every stage reads Parquet, two counter read-backs") {
     val plans = firstPlans
-    assert(plans.count(written(_).isDefined) >= 8, s"${plans.size} executions")
+    // each stage is one write, in order; connected components collects its
+    // edges and finishes in the driver, so no round stage under <workDir>/cc
+    assert(plans.flatMap(written).map(Paths.get(_).getParent.getFileName.toString) ==
+      completionOrder, s"${plans.size} executions")
+    assert(noRoundStages(firstDir))
     val recounts = plans.filter(p => ExecutedPlans.operators(p)
       .exists(_.expressions.exists(_.exists(_.isInstanceOf[SparkPartitionID]))))
     assert(recounts.isEmpty, s"executions grouping by spark_partition_id:\n${recounts.mkString("\n")}")
@@ -72,18 +59,17 @@ class StagedRunSpec extends SparkSpec {
     val readBacks = plans.flatMap { p =>
       written(p) match {
         case w @ Some(_) => last = w; None
-        case None => last.filter(scanned(p).contains)
+        case None => last.filter(scanned(p).contains).map(_ -> p)
       }
     }
-    assert(readBacks.map(Paths.get(_).getParent.getFileName.toString) == Seq("attrs", "blocks"),
-      s"read-backs: ${readBacks.mkString(", ")}")
-    // staged connected components writes the canonical edges and each
-    // iteration's as snapshot stages under <workDir>/cc, in order, each the
-    // next iteration's input
-    val iters = ccIterations(firstDir)
-    assert(iters.headOption.contains("cc/edges_iter_0") && iters.size >= 2, iters.mkString(","))
-    assert(plans.flatMap(written).filter(_.contains("/cc/")) ==
-      iters.map(i => s"$firstDir/$i/data.parquet"))
+    // attrs' and blocks' counter passes, and connected components' one
+    // bounded collect of the scored edges
+    assert(readBacks.map(r => Paths.get(r._1).getParent.getFileName.toString) ==
+      Seq("attrs", "blocks", "scored"), s"read-backs: ${readBacks.map(_._1).mkString(", ")}")
+    assert(ExecutedPlans.operators(readBacks.last._2).exists {
+      case l: CollectLimitExec => l.limit == ConnectedComponents.LocalFinishRows + 1
+      case _ => false
+    }, readBacks.last._2)
   }
 
   test("two identical staged runs write byte-identical manifests") {
@@ -91,8 +77,8 @@ class StagedRunSpec extends SparkSpec {
     val second = tmp("again")
     Linkage.run(spark, pages, Linkage.Config(workDir = second))
     val (a, b) = (manifests(firstDir), manifests(second))
-    assert(a.keySet == (Seq("ingest", "projected", "attrs", "blocks", "pairs", "scored", "clusters") ++
-      ccIterations(firstDir)).map(_ + "/manifest.json").toSet, a.keySet)
+    assert(a.keySet == Seq("ingest", "projected", "attrs", "blocks", "pairs", "scored", "clusters")
+      .map(_ + "/manifest.json").toSet, a.keySet)
     assert(b.keySet == a.keySet, b.keySet)
     a.foreach { case (k, v) => assert(b(k) == v, s"$k differs") }
     // the partition list counts rows per write task; they sum to the stage's rows
@@ -102,11 +88,11 @@ class StagedRunSpec extends SparkSpec {
     assert(projected.contains("\"partitions_count\":\"rows per write task"))
     val store = new SnapshotStore(spark, firstDir, resume = true)
     assert(store.counter("projected", "rows").contains(parts) && parts == 2000L)
-    // the top-level clustering counters sum the iteration manifests'
-    val iters = ccIterations(firstDir)
-    assert(firstRun.counters.get("clusters.cc_iterations").contains(iters.size - 1L))
-    assert(firstRun.counters.get("clusters.merges_applied")
-      .contains(iters.flatMap(store.counter(_, "merges_applied")).sum))
+    // no distributed round ran, and every page that joins a cluster is one union
+    val clusters = firstRun.clusters.select("cluster_id").distinct().count()
+    assert(firstRun.counters.get("clusters.cc_iterations").contains(0L))
+    assert(firstRun.counters.get("clusters.merges_applied").contains(2000L - clusters),
+      s"${firstRun.counters.get("clusters.merges_applied")} merges, $clusters clusters")
   }
 
   test("a staged run whose pages share no block completes with zero pairs") {
@@ -132,8 +118,8 @@ class StagedRunSpec extends SparkSpec {
     val resumed = Linkage.run(spark, lonely, Linkage.Config(workDir = dir, resume = true))
     assert(resumed.resumedStages == Seq("projected", "attrs", "blocks", "pairs", "scored", "clusters"))
     singletons(resumed)
-    // without the clusters manifest, clustering reads the empty input edges
-    // back instead of writing them again
+    // without the clusters manifest, clustering collects the empty edges
+    // from the scored snapshot and writes only the clusters
     Files.delete(Paths.get(s"$dir/clusters/manifest.json"))
     var again: Linkage.Result = null
     val plans = ExecutedPlans.capture(spark) {
@@ -141,23 +127,17 @@ class StagedRunSpec extends SparkSpec {
     }
     assert(again.resumedStages == Seq("projected", "attrs", "blocks", "pairs", "scored"))
     assert(plans.flatMap(written) == Seq(s"$dir/clusters/data.parquet"), plans.flatMap(written))
-    assert(ccIterations(dir) == Seq("cc/edges_iter_0"))
+    assert(noRoundStages(dir))
     assert(again.counters.get("clusters.cc_iterations").contains(0L), again.counters)
     singletons(again)
   }
 
-  /** The stages in the order a staged run completes them (ingest's manifest
-    * follows projected's): the top-level stages with connected components'
-    * iterations before clusters. */
-  private lazy val completionOrder = Seq("projected", "attrs", "blocks", "pairs", "scored") ++
-    ccIterations(firstDir) :+ "clusters"
-
   /** Resumes a copy of the first run killed after `completionOrder(boundary)`:
     * every later manifest is gone and the next stage's write was cut short
     * (no commit marker, half its files, the first of them truncated). The
-    * resume must resume exactly the complete top-level prefix, write exactly
-    * the incomplete stages and iterations, and end with the uninterrupted
-    * run's clusters and counters. */
+    * resume must resume exactly the complete prefix, write exactly the
+    * incomplete stages, and end with the uninterrupted run's clusters and
+    * counters. */
   private def killAndResume(boundary: Int): Unit = {
     val (done, rest) = completionOrder.splitAt(boundary + 1)
     val at = s"killed after ${done.last}"
@@ -174,7 +154,7 @@ class StagedRunSpec extends SparkSpec {
     val plans = ExecutedPlans.capture(spark) {
       r = Linkage.run(spark, pages, Linkage.Config(workDir = dir, resume = true))
     }
-    assert(r.resumedStages == completionOrder.filterNot(_.startsWith("cc/")).filter(done.contains), at)
+    assert(r.resumedStages == done, at)
     assert(plans.flatMap(written).map(_.stripPrefix(s"$dir/").stripSuffix("/data.parquet")) == rest, at)
     assert(r.counters == firstRun.counters, at)
     assert(r.clusters.orderBy("url").collect().sameElements(firstRun.clusters.orderBy("url").collect()), at)
@@ -182,13 +162,6 @@ class StagedRunSpec extends SparkSpec {
   }
 
   test("kill/resume after every top-level stage: only the incomplete stages recompute") {
-    for (boundary <- completionOrder.indices if !completionOrder(boundary).startsWith("cc/")
-         if boundary < completionOrder.size - 1)
-      killAndResume(boundary)
-  }
-
-  test("kill/resume after every connected-components iteration: clustering continues from it") {
-    for (boundary <- completionOrder.indices if completionOrder(boundary).startsWith("cc/"))
-      killAndResume(boundary)
+    for (boundary <- completionOrder.indices.init) killAndResume(boundary)
   }
 }

@@ -15,7 +15,7 @@ class StreamingSpec extends SparkSpec {
 
   /** FileStreamSource needs a directory; stage the single parquet file. */
   private lazy val streamDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-stream")
+    val d = tempDir("stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("events.parquet"))
@@ -62,9 +62,9 @@ class StreamingSpec extends SparkSpec {
 
   test("sessionization state spans micro-batches: exactly-once, never split") {
     import java.nio.file.{Files, Paths}
-    val d = Files.createTempDirectory("graft-sess-stream")
+    val d = tempDir("sess-stream")
     def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-sess-chunk").toString
+      val tmp = tempDir("sess-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -112,9 +112,9 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest: two-chunk page stream builds the identical block table") {
     import java.nio.file.{Files, Paths}
     val pages = graft.fixtures.Fixture.pages(spark, 500).toDF().cache()
-    val d = Files.createTempDirectory("graft-ingest-stream")
+    val d = tempDir("ingest-stream")
     def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-ingest-chunk").toString
+      val tmp = tempDir("ingest-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -245,9 +245,9 @@ class StreamingSpec extends SparkSpec {
     val attrsR = Scoring.attrsWithIdf(spark, projR, Map.empty)
       .toDF().localCheckpoint().as[ScoreAttrs]
 
-    val d = Files.createTempDirectory("graft-tt-stream")
+    val d = tempDir("tt-stream")
     def writeChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-tt-chunk").toString
+      val tmp = tempDir("tt-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head

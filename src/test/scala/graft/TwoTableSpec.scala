@@ -64,7 +64,7 @@ class TwoTableSpec extends SparkSpec {
   }
 
   test("staged two-table run matches the in-memory result; kill/resume recomputes only missing stages") {
-    val workDir = java.nio.file.Files.createTempDirectory("graft-tt").toString
+    val workDir = tempDir("tt").toString
     val cfg = Linkage.TwoTableConfig(workDir = workDir)
     val staged = Linkage.runTwoTableStaged(spark, left, right, cfg)
     val (f1, tp, fp, fn) = f1Of(staged.matches)
@@ -91,7 +91,7 @@ class TwoTableSpec extends SparkSpec {
 
     // kill/resume: only stages missing from the partial copy recompute —
     // notably the expensive A×B pair stage is NOT re-joined
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-tt-partial").toString
+    val dir2 = tempDir("tt-partial").toString
     val full = new java.io.File(workDir)
     for (stage <- Seq("ingest_l", "ingest_r", "projected_l", "projected_r",
         "attrs_l", "attrs_r", "blocks_l", "blocks_r", "pairs")) {
@@ -106,8 +106,22 @@ class TwoTableSpec extends SparkSpec {
       .orderBy("url1", "url2").collect().sameElements(stg))
   }
 
+  test("staged split runs write byte-identical manifests") {
+    // the matches write reads the scored snapshot without a shuffle, so which
+    // write task gets which rows follows the file listing: the manifests list
+    // per-task rows largest first, never by task index
+    val dirs = Seq("tt-same-a", "tt-same-b").map(tempDir(_).toString)
+    dirs.foreach(d => Linkage.runTwoTableStaged(spark, left, right, Linkage.TwoTableConfig(workDir = d)))
+    val Seq(a, b) = dirs.map(manifests)
+    assert(a.keySet.contains("matches/manifest.json") && b.keySet == a.keySet, b.keySet)
+    a.foreach { case (k, v) => assert(b(k) == v, s"$k differs") }
+    val rows = "\\{\"partition\":\\d+,\"rows\":(\\d+)\\}".r
+      .findAllMatchIn(a("matches/manifest.json")).map(_.group(1).toLong).toSeq
+    assert(rows.nonEmpty && rows == rows.sorted.reverse, rows)
+  }
+
   test("two-table re-threshold resume: per-side stages and the A×B join resume") {
-    val workDir = java.nio.file.Files.createTempDirectory("graft-tt-rethresh").toString
+    val workDir = tempDir("tt-rethresh").toString
     val cfg = Linkage.TwoTableConfig(workDir = workDir)
     val base = Linkage.runTwoTableStaged(spark, left, right, cfg)
     val strict = Linkage.runTwoTableStaged(spark, left, right,

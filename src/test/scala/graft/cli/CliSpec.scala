@@ -11,7 +11,7 @@ class CliSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.01"
   private val two = Seq("q01_scan_filter_project", "q02_group_agg")
 
-  private def tmp(): Path = Files.createTempDirectory("graft-cli")
+  private def tmp(): Path = tempDir("cli")
 
   /** Listeners on the session's listener bus, which Spark keeps package-private. */
   private def listenerCount: Int = {
